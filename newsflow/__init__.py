@@ -35,5 +35,5 @@ from newsflow.dedup.minhash import (  # noqa: F401
 from newsflow.ops.asof import asof_join  # noqa: F401
 from newsflow.ops.rangejoin import range_join_binned  # noqa: F401
 from newsflow.ops.scale import salted_join, write_bucketed  # noqa: F401
-from newsflow.sim.ivf import ivf_topk  # noqa: F401
+from newsflow.sim.ivf import build_ivf_index, ivf_search  # noqa: F401
 from newsflow.sim.knn import cosine_topk  # noqa: F401

@@ -1,0 +1,96 @@
+"""Session-scoped artifact cache: the indexes, projections and fitted
+weights that many requests read and only a corpus change should rebuild.
+
+An entry lives in a slot keyed on (Spark application id, kind, sf_dir)
+and is stamped with the identity of every table file it was built from
+(`tables._schema_cache_key`: path, size, mtime_ns). A lookup returns the
+entry's value while
+
+- the stamp still matches the files on disk (a table rewritten in place
+  under the same sf_dir rebuilds), and
+- every DataFrame the entry owns is still registered with the cache
+  manager (``spark.catalog.clearCache()`` deregisters frames without
+  telling this module; the entry is rebuilt, not served half-gone).
+
+Otherwise the entry is rebuilt. The entry it replaces has its frames
+unpersisted BEFORE the build runs: Spark's cache manager substitutes any
+persisted plan that matches a new one, and the old and new builds of a
+rewritten file plan identically (same path, same schema), so a stale
+frame left registered would be served as the new build's data.
+
+Entries owned by another application belong to a stopped SparkContext:
+they are dropped without calling into them (unpersist on a dead context
+raises and would fail the new session's first request).
+
+Frames are persisted with ``persist()`` (MEMORY_AND_DISK), not
+``localCheckpoint``: a lost executor's blocks recompute from lineage on
+a cluster, where a local checkpoint would fail the request.
+
+Only the artifact is shared. Each request still reads its own inputs and
+runs its own plan over the artifact, so results are those of a fresh
+build.
+"""
+
+from __future__ import annotations
+
+import threading
+from dataclasses import dataclass
+from typing import Callable, Sequence, TypeVar
+
+from pyspark.sql import DataFrame, SparkSession
+
+from newsflow.tables import _schema_cache_key, table_path
+
+T = TypeVar("T")
+
+
+@dataclass(frozen=True)
+class _Entry:
+    stamp: tuple
+    value: object
+    frames: tuple[DataFrame, ...]
+
+    def live(self) -> bool:
+        return all(f.storageLevel.useMemory for f in self.frames)
+
+
+_ENTRIES: dict[tuple, _Entry] = {}
+# One lock per slot serializes builds of the same artifact (concurrent
+# cold requests wait for one build instead of each running their own);
+# _LOCK guards the two dicts themselves.
+_SLOT_LOCKS: dict[tuple, threading.Lock] = {}
+_LOCK = threading.Lock()
+
+
+def get(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    tables: Sequence[str],
+    build: Callable[[], tuple[T, Sequence[DataFrame]]],
+) -> T:
+    """The ``kind`` artifact built from ``tables`` under ``sf_dir``.
+
+    ``build()`` returns ``(value, frames)``: the artifact and the
+    DataFrames it persisted, which the entry then owns (and unpersists
+    when it is replaced)."""
+    app = spark.sparkContext.applicationId
+    slot = (app, kind, sf_dir)
+    stamp = tuple(_schema_cache_key(table_path(sf_dir, t)) for t in tables)
+    with _LOCK:
+        for k in [k for k in _ENTRIES if k[0] != app]:
+            del _ENTRIES[k]
+        for k in [k for k in _SLOT_LOCKS if k[0] != app]:
+            del _SLOT_LOCKS[k]
+        slot_lock = _SLOT_LOCKS.setdefault(slot, threading.Lock())
+    with slot_lock:
+        hit = _ENTRIES.get(slot)
+        if hit is not None and hit.stamp == stamp and hit.live():
+            return hit.value
+        if hit is not None:
+            for f in hit.frames:
+                f.unpersist()
+        value, frames = build()
+        with _LOCK:
+            _ENTRIES[slot] = _Entry(stamp, value, tuple(frames))
+        return value

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from newsflow import artifacts
 from newsflow.dedup import core, embedding, minhash, simhash
 from newsflow.functions.scalars import sql_dround
 from newsflow.functions.text import sql_shingles_rel, sql_tokens
@@ -256,51 +257,26 @@ def minhash_near_dup_pairs_cms_planned(
     )
 
 
-# Single-entry cache for the shared shingle projection: (app id, sf_dir)
-# -> cached DataFrame. The audit queries below are lazy (the consuming
-# action runs in the driver AFTER the builder returns), so the builder
-# can't unpersist its own cache — instead the cache is BOUNDED: one
-# entry per session, the previous entry unpersisted on key change, and
-# repeat invocations with the same key (the correctness driver runs
-# dedup_lsh_recall_eval, near_dup_cluster_agreement and
-# split_leakage_audit in one session) reuse one cached frame instead of
-# stacking a new MEMORY_AND_DISK projection per call (ADVICE r4).
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shared_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    hit = _SHINGLE_CACHE.get(key)
-    # storageLevel check: bench harnesses call catalog.clearCache()
-    # between timed runs, which deregisters the frame without touching
-    # this dict — reusing it then would silently lose the shared
-    # projection (the shingle pass would recompute once per consumer).
-    # A deregistered entry is rebuilt and re-cached instead.
-    if hit is not None and hit.storageLevel.useMemory:
-        return hit
-    # Eviction is keyed, not dict-wide (ADVICE r5): entries from OTHER
-    # applications belong to stopped sessions — drop them without
-    # unpersist (the context is gone; calling into it raises and would
-    # poison the new session's first dedup-audit call).  Live-app
-    # entries for other sf_dirs stay cached so alternating sf_dirs in
-    # one session don't thrash a rebuild per call; the dict stays
-    # bounded by the handful of sf_dirs a session ever touches.
-    for k in [k for k in _SHINGLE_CACHE if k[0] != app]:
-        _SHINGLE_CACHE.pop(k)
-    stale = _SHINGLE_CACHE.pop(key, None)
-    if stale is not None:
-        try:
-            stale.unpersist()
-        except Exception:
-            pass
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    # cache() is MEMORY_AND_DISK for DataFrames: spills (never OOMs)
-    # under pressure, evictable, session-scoped (bench clears caches
-    # between queries). Measured win: 1.86s -> 1.45s at sf0.1.
-    arrays = core.doc_shingle_arrays(docs, 3).cache()
-    _SHINGLE_CACHE[key] = arrays
-    return arrays
+    """The shingle projection shared by the dedup audits, one cached
+    frame per session and documents file (newsflow.artifacts). The audit
+    queries are lazy (the consuming action runs after the builder
+    returns), so no builder can unpersist its own cache; repeat
+    invocations (the correctness driver runs dedup_lsh_recall_eval,
+    near_dup_cluster_agreement and split_leakage_audit in one session)
+    reuse one cached frame instead of stacking a new MEMORY_AND_DISK
+    projection per call."""
+
+    def build():
+        docs = spread(load_table(spark, sf_dir, "documents"))
+        # MEMORY_AND_DISK: spills (never OOMs) under pressure. Measured
+        # win: 1.86s -> 1.45s at sf0.1.
+        arrays = core.doc_shingle_arrays(docs, 3).persist()
+        return arrays, (arrays,)
+
+    return artifacts.get(
+        spark, "shingle_arrays", sf_dir, ("documents",), build
+    )
 
 
 def _exact_and_lsh_pair_pipelines(spark, sf_dir):

@@ -93,7 +93,7 @@ def kmeans_fit(
     """Run the deterministic Lloyd loop and return BOTH products: the
     final (vec_id, v, cluster) assignment frame and the final centroid
     dict (the c1 relation of the unrolled oracle) — the quantizer state
-    `ivf_topk_native` probes against."""
+    `sim/ivf.py::build_native_ivf_index` persists as its index."""
     vecs = embeddings.select(
         "vec_id", as_double_array(F.col("embedding")).alias("v")
     )

@@ -109,12 +109,11 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate cosine top-5: seeded-KMeans cells, probe the 4
     nearest of 8 cells per query, exact re-rank inside them."""
-    from newsflow.sim.ivf import ivf_topk
+    from newsflow.sim.ivf import cached_ivf_index, ivf_search
 
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    return ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 8), k=5, n_cells=8, n_probe=4
-    )
+    index = cached_ivf_index(spark, sf_dir, n_cells=8)
+    emb = load_table(spark, sf_dir, "embeddings")
+    return ivf_search(index, emb.filter(F.col("vec_id") < 8), k=5, n_probe=4)
 
 
 from newsflow.sim.kmeans import kmeans_assign, kmeans_oracle_sql  # noqa: E402
@@ -184,11 +183,12 @@ def knn_cosine_ivf_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     as rows-only cross-checks. 2 of 8 cells probed per query, so the
     oracle certifies REAL approximation behavior, not exhaustive
     search dressed up as ANN."""
-    from newsflow.sim.ivf import ivf_topk_native
+    from newsflow.sim.ivf import cached_native_ivf_index, native_ivf_search
 
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    return ivf_topk_native(
-        emb, emb.filter(F.col("vec_id") < 8), k=5, n_probe=2
+    index = cached_native_ivf_index(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    return native_ivf_search(
+        index, emb.filter(F.col("vec_id") < 8), k=5, n_probe=2
     )
 
 
@@ -222,22 +222,23 @@ def knn_cosine_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors whose document source is in an allowed licence slice
     (5 of the 20 sources, ~25% of the corpus). The predicate is pushed
     onto the inverted-list side BELOW the probe (semi-join before any
-    candidate forms — sim/ivf.py::ivf_topk_native), so each query gets
+    candidate forms — sim/ivf.py::native_ivf_search), so each query gets
     the true top-k among QUALIFYING vectors in its probed cells;
     post-filtering the unfiltered top-k would return ~k/4 rows per
     query and silently drop qualifying neighbors ranked below the
     unfiltered cut (divergence demonstrated on this corpus in
     tests/test_sim_ivf.py). Exactly oracled end-to-end: quantizer,
     probe, pushed filter, and rounded re-rank all replayed in SQL."""
-    from newsflow.sim.ivf import ivf_topk_native
+    from newsflow.sim.ivf import cached_native_ivf_index, native_ivf_search
 
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
+    index = cached_native_ivf_index(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
     allowed = docs.filter(
         F.col("source").isin(*FILTERED_ANN_SOURCES)
     ).select("doc_id")
-    return ivf_topk_native(
-        emb,
+    return native_ivf_search(
+        index,
         emb.filter(F.col("vec_id") < 8),
         k=5,
         n_probe=2,
@@ -338,8 +339,9 @@ def knn_filtered_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     escalates to n_probe=K the honest plan is the filtered
     brute-force baseline over the qualifying semi-join — exactly what
     this eval's ground-truth side computes."""
-    from newsflow.sim.ivf import ivf_topk_native
+    from newsflow.sim.ivf import cached_native_ivf_index, native_ivf_search
 
+    index = cached_native_ivf_index(spark, sf_dir)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     docs = load_table(spark, sf_dir, "documents")
     queries = emb.filter(F.col("vec_id") < 8)
@@ -356,8 +358,8 @@ def knn_filtered_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact = knn.cosine_topk(corpus, queries, k=5).select(
             "query_id", "neighbor_id"
         )
-        approx = ivf_topk_native(
-            emb, queries, k=5, n_probe=2, neighbor_filter=allowed
+        approx = native_ivf_search(
+            index, queries, k=5, n_probe=2, neighbor_filter=allowed
         ).select(
             F.col("query_id").alias("aq"),
             F.col("neighbor_id").alias("an"),
@@ -599,14 +601,15 @@ def knn_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the two top-k pipelines dominate (both
     candidate-bounded); the recall join touches 8x5 result rows."""
-    from newsflow.sim.ivf import ivf_topk_native
+    from newsflow.sim.ivf import cached_native_ivf_index, native_ivf_search
 
+    index = cached_native_ivf_index(spark, sf_dir)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
     exact = knn.cosine_topk(emb, queries, k=5).select(
         "query_id", "neighbor_id"
     )
-    approx = ivf_topk_native(emb, queries, k=5, n_probe=2).select(
+    approx = native_ivf_search(index, queries, k=5, n_probe=2).select(
         F.col("query_id").alias("aq"),
         F.col("neighbor_id").alias("an"),
         F.lit(1).alias("hit"),

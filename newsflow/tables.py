@@ -29,6 +29,10 @@ TABLES = (
 )
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    return f"{sf_dir}/{name}.parquet"
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table; normalizes the events timestamp column.
 
@@ -40,7 +44,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path was written against.
     """
     _apply_runtime_confs_once(spark)
-    path = f"{sf_dir}/{name}.parquet"
+    path = table_path(sf_dir, name)
     df = _read_with_cached_schema(spark, path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")

@@ -24,7 +24,7 @@ from newsflow.dedup import core, minhash, simhash  # noqa: E402
 from newsflow.session import get_spark  # noqa: E402
 from newsflow import curation  # noqa: E402
 from newsflow.sim.hyperplane import hyperplane_topk  # noqa: E402
-from newsflow.sim.ivf import ivf_topk  # noqa: E402
+from newsflow.sim.ivf import build_ivf_index, ivf_search  # noqa: E402
 from newsflow.tables import load_table  # noqa: E402
 
 
@@ -96,7 +96,9 @@ def main() -> None:
     queries = big_emb.filter(F.col("vec_id") < 16)
 
     t0 = time.perf_counter()
-    n_knn = ivf_topk(big_emb, queries, k=5, n_cells=16, n_probe=4).count()
+    index = build_ivf_index(big_emb, n_cells=16)
+    n_knn = ivf_search(index, queries, k=5, n_probe=4).count()
+    index.lists.unpersist()
     t_ivf = time.perf_counter() - t0
 
     t0 = time.perf_counter()

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from newsflow.sim.ivf import ivf_topk
+from newsflow.sim.ivf import build_ivf_index, ivf_search
 from newsflow.sim.knn import cosine_topk
 from newsflow.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -22,13 +22,20 @@ def queries(emb):
     return emb.filter(F.col("vec_id") < 12)
 
 
+@pytest.fixture(scope="module")
+def mllib_index(emb):
+    index = build_ivf_index(emb, n_cells=8)
+    yield index
+    index.lists.unpersist()
+
+
 def _pairs(df):
     return {(r["query_id"], r["neighbor_id"]) for r in df.collect()}
 
 
-def test_exhaustive_probe_equals_brute_force(emb, queries):
+def test_exhaustive_probe_equals_brute_force(emb, queries, mllib_index):
     exact = cosine_topk(emb, queries, k=5)
-    ivf = ivf_topk(emb, queries, k=5, n_cells=8, n_probe=8)
+    ivf = ivf_search(mllib_index, queries, k=5, n_probe=8)
     got = {
         (r["query_id"], r["neighbor_id"]): r["cosine_sim"]
         for r in ivf.collect()
@@ -42,9 +49,9 @@ def test_exhaustive_probe_equals_brute_force(emb, queries):
         assert got[key] == pytest.approx(sim, abs=1e-6)
 
 
-def test_partial_probe_recall(emb, queries):
+def test_partial_probe_recall(emb, queries, mllib_index):
     exact_pairs = _pairs(cosine_topk(emb, queries, k=5))
-    ivf_pairs = _pairs(ivf_topk(emb, queries, k=5, n_cells=8, n_probe=4))
+    ivf_pairs = _pairs(ivf_search(mllib_index, queries, k=5, n_probe=4))
     recall = len(ivf_pairs & exact_pairs) / len(exact_pairs)
     # Seeded KMeans → deterministic. Measured: 0.62/0.77/0.92 recall at
     # n_probe 2/4/6 of 8 cells on this fixture — half the cells keeps
@@ -60,7 +67,7 @@ def test_filtered_search_beats_post_filter_of_topk(spark):
     rank below the unfiltered cut."""
     import pyspark.sql.functions as F2
 
-    from newsflow.sim.ivf import ivf_topk_native
+    from newsflow.sim.ivf import build_native_ivf_index, native_ivf_search
     from newsflow.sim.queries import FILTERED_ANN_SOURCES
     from newsflow.tables import load_table, spread
 
@@ -71,10 +78,16 @@ def test_filtered_search_beats_post_filter_of_topk(spark):
     ).select("doc_id")
     queries = emb.filter(F2.col("vec_id") < 8)
 
-    pushed = ivf_topk_native(
-        emb, queries, k=5, n_probe=2, neighbor_filter=allowed
-    ).collect()
-    unfiltered = ivf_topk_native(emb, queries, k=5, n_probe=2).collect()
+    index = build_native_ivf_index(emb)
+    try:
+        pushed = native_ivf_search(
+            index, queries, k=5, n_probe=2, neighbor_filter=allowed
+        ).collect()
+        unfiltered = native_ivf_search(
+            index, queries, k=5, n_probe=2
+        ).collect()
+    finally:
+        index.lists.unpersist()
 
     allowed_ids = {r.doc_id for r in allowed.collect()}
     # Post-filter of the unfiltered top-5 (the trap).
@@ -102,7 +115,11 @@ def test_escalated_probes_recover_filtered_recall(spark):
     IVF starves (measured recall@5 0.55 at sf0.01); escalate_n_probe
     sizes the probe count from the selectivity estimate and must
     recover recall >= 0.9 against the filtered brute-force baseline."""
-    from newsflow.sim.ivf import escalate_n_probe, ivf_topk_native
+    from newsflow.sim.ivf import (
+        build_native_ivf_index,
+        escalate_n_probe,
+        native_ivf_search,
+    )
     from newsflow.sim.queries import FILTERED_EVAL_TIERS
     from tests.conftest import SF_ORACLE
 
@@ -123,10 +140,12 @@ def test_escalated_probes_recover_filtered_recall(spark):
         )
     )
 
+    index = build_native_ivf_index(emb)
+
     def recall(n_probe):
         got = _pairs(
-            ivf_topk_native(
-                emb, queries, k=5, n_probe=n_probe,
+            native_ivf_search(
+                index, queries, k=5, n_probe=n_probe,
                 neighbor_filter=allowed,
             )
         )
@@ -135,8 +154,11 @@ def test_escalated_probes_recover_filtered_recall(spark):
     sel = len(srcs) / 20.0  # 20 uniform sources
     escalated = escalate_n_probe(sel, n_corpus)
     assert escalated > 2  # the rule actually escalates at 5%
-    base_recall = recall(2)
-    esc_recall = recall(escalated)
+    try:
+        base_recall = recall(2)
+        esc_recall = recall(escalated)
+    finally:
+        index.lists.unpersist()
     assert base_recall < 0.8  # the starvation is real on this corpus
     assert esc_recall >= 0.9
     assert esc_recall > base_recall
