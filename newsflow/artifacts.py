@@ -29,6 +29,30 @@ a cluster, where a local checkpoint would fail the request.
 Only the artifact is shared. Each request still reads its own inputs and
 runs its own plan over the artifact, so results are those of a fresh
 build.
+
+The kinds held here, and their users:
+
+- ``gdelt_core`` (documents; `etl.queries._core_df`): the gdelt core
+  table — the eight gdelt analyses in `etl/queries.py`, `org_pagerank`
+  and, through ``org_edges``, `org_triangle_counts`.
+- ``org_edges`` (documents; `graph._org_edges`): the degree-ordered
+  undirected org co-mention edges, built from ``gdelt_core`` —
+  `org_triangle_counts`.
+- ``ivf_native`` (embeddings; `sim.ivf.cached_native_ivf_index`): the
+  deterministic-quantizer IVF index — `knn_cosine_ivf_native`,
+  `knn_cosine_filtered`, `knn_ivf_recall_eval`,
+  `knn_filtered_recall_eval`.
+- ``ivf_mllib/<n_cells>`` (embeddings; `sim.ivf.cached_ivf_index`): the
+  MLlib-quantizer IVF index — `knn_cosine_ivf`.
+- ``shingle_arrays`` (documents; `dedup.queries._shared_shingle_arrays`):
+  the 3-gram shingle projection — `dedup_lsh_recall_eval`,
+  `near_dup_cluster_agreement`, `split_leakage_audit`,
+  `corpus_cluster_split`, `corpus_takedown_audit`,
+  `corpus_takedown_ffd_audit`.
+- ``quality_clf`` and ``quality_clf/sampled`` (documents;
+  `ml.quality_clf`): the fitted quality-classifier weights —
+  `quality_clf_coefficients`, `quality_clf_filter_eval` and
+  `quality_clf_sampled_teacher_eval`.
 """
 
 from __future__ import annotations
@@ -94,3 +118,27 @@ def get(
         with _LOCK:
             _ENTRIES[slot] = _Entry(stamp, value, tuple(frames))
         return value
+
+
+def persisted(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a persisted frame whose logical plan is one scan
+    of ``df``'s RDD: the frame-valued artifacts' ``build()`` step.
+
+    Not ``df.persist()`` itself: a cached relation carries its whole
+    build plan under it, and Spark renders a query's plan several times
+    per run (at its start and at each adaptive re-plan). Every request
+    would pay for the build's plan again; for the gdelt core, whose
+    domain expression holds the ~9.5k public-suffix literals, a
+    triangle count rendered 18 MB of plan text per call. Over the RDD
+    the plan is one ``Scan ExistingRDD``.
+
+    Unlike ``localCheckpoint``, the RDD keeps its lineage, so a lost
+    block recomputes. Taking the RDD runs ``df``'s shuffle stages now
+    (adaptive execution materializes them before it plans the final
+    stage); the final stage runs, and fills the cache, inside the first
+    action that reads the frame: no count job of its own."""
+    spark = df.sparkSession
+    rows = spark._jsparkSession.createDataFrame(
+        df._jdf.javaRDD(), df._jdf.schema()
+    )
+    return DataFrame(rows, spark).persist()

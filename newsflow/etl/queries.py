@@ -22,6 +22,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from newsflow import artifacts
 from newsflow.etl.gdelt import build_core, qa_summary, registrable_domain
 from newsflow.registry import register
 from newsflow.tables import load_table
@@ -211,13 +212,34 @@ FROM derived
 """
 
 
-def _core_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = synth_gkg_raw(spark, sf_dir)
+def build_gdelt_core(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A fresh, uncached gdelt_core over the synthesized GKG raw input."""
     return build_core(
-        raw,
+        synth_gkg_raw(spark, sf_dir),
         label_windows=_TEST_LABEL_WINDOWS,
         keyword_lists=_TEST_KEYWORDS,
     )
+
+
+def _core_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The session's gdelt_core over sf_dir's documents, one cached frame
+    per corpus (newsflow.artifacts) shared by the ten queries that read
+    it: the eight gdelt analyses here, `org_pagerank` and
+    `org_triangle_counts`.
+
+    The reference's build_datasets.py writes gdelt_core once and its
+    analysis jobs read it; this does the same per session and corpus.
+    A rebuild inside every call would pay the whole build's planning
+    work per call, including analyzing the ~9.5k public-suffix literals
+    of `registrable_domain` again. Building the artifact runs only the
+    core's shuffle stage; the first action that reads it fills the
+    cache (`artifacts.persisted`)."""
+
+    def build():
+        core = artifacts.persisted(build_gdelt_core(spark, sf_dir))
+        return core, (core,)
+
+    return artifacts.get(spark, "gdelt_core", sf_dir, ("documents",), build)
 
 
 @register(

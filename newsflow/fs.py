@@ -168,7 +168,14 @@ def fs_list_partition_data_files(
     Returns ``{partition_dir_name: [data file names]}`` — dirs with no
     data files map to ``[]`` — or ``None`` when the batched form is
     unavailable (no glob support on the store), in which case callers
-    MUST fall back to the exact per-dir listing."""
+    MUST fall back to the exact per-dir listing.
+
+    Assumes a single writer. The two globs are not one atomic listing:
+    a partition dir created between them loses its files (it is not in
+    the first glob), and one deleted between them reports ``[]``. The
+    graph-bucket manifest has one writer, and for its tear detection
+    both cases fail safe; under concurrent writers use the per-dir
+    listing."""
     # A glob special character in the TABLE path would make globStatus
     # silently mis-match (wrong listing, not an exception — the
     # fallback would never trigger); route such paths to the exact

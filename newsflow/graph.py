@@ -25,6 +25,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from newsflow import artifacts
 from newsflow.functions.scalars import dround
 from newsflow.registry import register
 
@@ -202,25 +203,32 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     Ties: (degree, id) is a total order — id breaks degree ties — so
     orientation is deterministic and acyclic.
 
-    Lineage: the oriented edge list feeds THREE plan branches (the
-    pivot join, the closure join, and — upstream — the degree
-    computation), so it is materialized once (eager localCheckpoint,
-    bounded: one 2-id row per undirected edge) instead of letting every
-    branch re-derive the co-mention ETL; without truncation the
-    degree-ordered plan re-ran the upstream pipeline 8× (25 shuffles vs
-    7 — caught by the PLANS.md audit diff).
+    Lineage: the oriented edge list feeds three branches of the
+    triangle plan (the pivot join's two sides and the closure join), and
+    its degree computation reads the undirected edges twice. This
+    function places no barrier, so every branch re-derives the
+    orientation from ``edges`` (24 exchanges over the gdelt co-mention
+    graph): meant for small or already-cached inputs. The registered
+    `org_triangle_counts` keeps the oriented edges as a corpus-level
+    artifact instead (`_org_edges`: persisted, not checkpointed, so a
+    lost block recomputes from lineage) and runs only the wedge and
+    closure joins of `count_triangles` per call (3 exchanges).
     """
-    und0 = (
-        edges.filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    deg = und0.select(
+    return count_triangles(oriented_edges(edges))
+
+
+def oriented_edges(edges: DataFrame) -> DataFrame:
+    """(src, dst, w) symmetric edges → (a, b): each undirected edge once,
+    oriented from its lower-(degree, id) endpoint to the higher."""
+    und = edges.filter(F.col("src") < F.col("dst")).select("src", "dst")
+    deg = und.select(
         F.explode(F.array("src", "dst")).alias("node")
     ).groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-    und = (
-        und0
-        .join(
+    lower = F.struct(F.col("deg_src"), F.col("src")) < F.struct(
+        F.col("deg_dst"), F.col("dst")
+    )
+    return (
+        und.join(
             deg.select(
                 F.col("node").alias("src"), F.col("deg").alias("deg_src")
             ),
@@ -233,27 +241,19 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
             "dst",
         )
         .select(
-            F.when(
-                F.struct(F.col("deg_src"), F.col("src"))
-                < F.struct(F.col("deg_dst"), F.col("dst")),
-                F.col("src"),
-            )
-            .otherwise(F.col("dst"))
-            .alias("a"),
-            F.when(
-                F.struct(F.col("deg_src"), F.col("src"))
-                < F.struct(F.col("deg_dst"), F.col("dst")),
-                F.col("dst"),
-            )
-            .otherwise(F.col("src"))
-            .alias("b"),
+            F.when(lower, F.col("src")).otherwise(F.col("dst")).alias("a"),
+            F.when(lower, F.col("dst")).otherwise(F.col("src")).alias("b"),
         )
-        .localCheckpoint(eager=True)
     )
-    e2 = und.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = und.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
+
+
+def count_triangles(oriented: DataFrame) -> DataFrame:
+    """Oriented (a, b) edges → (org, n_triangles): wedges (a→b)+(b→c)
+    closed by (a→c), each triangle counted once at each corner."""
+    e2 = oriented.select(F.col("a").alias("b"), F.col("b").alias("c"))
+    e3 = oriented.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
     tris = (
-        und.join(e2, "b")
+        oriented.join(e2, "b")
         .join(
             e3,
             (F.col("a") == F.col("ta")) & (F.col("c") == F.col("tc")),
@@ -266,6 +266,20 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     return corners.groupBy("org").agg(
         F.count(F.lit(1)).alias("n_triangles")
     )
+
+
+def _org_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The degree-ordered org co-mention edges of sf_dir's gdelt core,
+    one cached frame per corpus (newsflow.artifacts), built from the
+    cached core; the first triangle count fills its cache."""
+    from newsflow.etl.queries import _core_df
+
+    def build():
+        und = oriented_edges(_co_edges(_core_df(spark, sf_dir)))
+        und = artifacts.persisted(und)
+        return und, (und,)
+
+    return artifacts.get(spark, "org_edges", sf_dir, ("documents",), build)
 
 
 def triangle_oracle_sql(edges_rel: str) -> str:
@@ -302,6 +316,4 @@ def org_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     local-clustering signal behind community detection (the reference's
     network_analysis.py reports raw partner degree; triangles separate
     genuine cliques from hub noise)."""
-    from newsflow.etl.queries import _core_df
-
-    return triangle_counts(_co_edges(_core_df(spark, sf_dir)))
+    return count_triangles(_org_edges(spark, sf_dir))

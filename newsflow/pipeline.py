@@ -159,9 +159,11 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `final` is consumed both by `selected`'s barrier (build time) and
     # by the stage-3 aggregate (action time), so without a barrier the
     # whole minhash candidate+verify chain executes twice per query —
-    # at 100 TB that is a second full pass over the keeper corpus. Lazy
-    # (not eager) so the first consumer materializes it inside the
-    # timed action and the second reuses the persisted handful of ids.
+    # at 100 TB that is a second full pass over the keeper corpus. The
+    # first consumer is `selected`'s EAGER checkpoint below, so the
+    # drop list (and the minhash chain behind it) materializes while
+    # the query is being built, not inside the action; the stage-3
+    # aggregate then reuses the checkpointed handful of ids.
     dropped = (
         pairs.select(F.col("doc_b").alias("doc_id"))
         .distinct()

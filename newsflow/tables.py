@@ -78,21 +78,45 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # per benched query build (guide §1.2: per-query driver work). Schemas
 # are metadata, not results: a fresh process re-reads them once, so
 # nothing is precomputed across bench runs. Session-independent (file
-# metadata). The size/mtime key (ADVICE r14) invalidates the entry if
-# a file at the same path is rewritten in-process with a different
-# schema (test fixtures); directories fall back to (path,) — their
-# per-file stats aren't worth a listing here.
+# metadata). The key (`_schema_cache_key`) invalidates the entry if a
+# table at the same path is rewritten in-process with a different
+# schema (test fixtures).
 _PARQUET_SCHEMA_CACHE: dict[tuple, object] = {}
 
 
 def _schema_cache_key(path: str) -> tuple:
+    """The identity of a table's files on disk, also the artifact cache's
+    staleness stamp (newsflow.artifacts).
+
+    A single file is keyed by (path, size, mtime_ns). A directory — how
+    Spark writes every table — is keyed by the (relative name, size,
+    mtime_ns) of each data file under it: rewriting a part file in place
+    changes neither the directory's own size nor its mtime. Names Spark
+    skips when reading (``_SUCCESS``, ``.crc``, ``_temporary/``) are
+    skipped here too. A missing path is keyed by (path,)."""
     import os as _os
+    import stat as _stat
 
     try:
         st = _os.stat(path)
-        return (path, st.st_size, st.st_mtime_ns)
     except OSError:
         return (path,)
+    if not _stat.S_ISDIR(st.st_mode):
+        return (path, st.st_size, st.st_mtime_ns)
+    files = []
+    for root, dirs, names in _os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in names:
+            if name.startswith(("_", ".")):
+                continue
+            full = _os.path.join(root, name)
+            try:
+                fst = _os.stat(full)
+            except OSError:
+                continue
+            rel = _os.path.relpath(full, path)
+            files.append((rel, fst.st_size, fst.st_mtime_ns))
+    return (path, tuple(sorted(files)))
 
 
 def _read_with_cached_schema(spark: SparkSession, path: str) -> DataFrame:

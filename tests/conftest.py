@@ -58,3 +58,15 @@ def duck_oracle():
     con = make_duck(SF_ORACLE)
     yield con
     con.close()
+
+
+def drop_cached_blocks(spark) -> int:
+    """Remove every cached RDD block from the block managers, as losing
+    the executors that held them would, while every frame stays
+    registered with the cache manager and every RDD stays marked
+    persisted. Returns the number of RDDs whose blocks were dropped."""
+    master = spark._jvm.org.apache.spark.SparkEnv.get().blockManager().master()
+    rdd_ids = list(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    for rdd_id in rdd_ids:
+        master.removeRdd(rdd_id, True)
+    return len(rdd_ids)

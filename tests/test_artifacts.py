@@ -1,7 +1,8 @@
-"""The session-scoped artifact cache (newsflow/artifacts.py) and the IVF
-index it holds: a cached index answers exactly like a fresh one, the
-quantizer is fitted once per corpus, and a changed file, a cleared cache
-or a stopped application each lead to the right rebuild or drop."""
+"""The session-scoped artifact cache (newsflow/artifacts.py) and what it
+holds — the IVF index, the gdelt core and the oriented org edges: a
+cached artifact answers exactly like a fresh build, it is built once per
+corpus, and a changed file, a cleared cache or a stopped application
+each lead to the right rebuild or drop."""
 
 from __future__ import annotations
 
@@ -11,7 +12,8 @@ import shutil
 import duckdb
 import pytest
 
-from newsflow import artifacts
+from newsflow import artifacts, graph
+from newsflow.etl import queries as etlq
 from newsflow.registry import all_specs
 from newsflow.sim import ivf
 from newsflow.sim import queries as simq
@@ -132,24 +134,129 @@ def test_other_application_entries_dropped_untouched(spark, sf_copy):
     assert all(k[0] == app for k in artifacts._ENTRIES)
 
 
-def test_warm_ivf_request_plans_without_jobs(spark):
-    """The index build (seed collect, Lloyd recompute, lists count) must
-    stay off the request path: building a warm request's DataFrame
-    launches no Spark job, while running it does."""
+def _warm_build_jobs(spark, name):
+    """Job ids run while building a warm ``name`` DataFrame, and while
+    building and then collecting it (job group + status tracker)."""
+    build = all_specs()[name].build
+    build(spark, SF_SMOKE).collect()  # warm
     sc = spark.sparkContext
-    simq.knn_cosine_ivf_native(spark, SF_SMOKE).collect()  # warm
-    group = f"warm-ivf-plan-{os.getpid()}"
-    sc.setJobGroup(group, "plan a warm IVF request")
+    group = f"warm-plan-{name}-{os.getpid()}"
+    sc.setJobGroup(group, f"plan a warm {name}")
     try:
-        df = simq.knn_cosine_ivf_native(spark, SF_SMOKE)
+        df = build(spark, SF_SMOKE)
         planned = list(sc.statusTracker().getJobIdsForGroup(group))
         df.collect()
         ran = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    return planned, ran
+
+
+def test_warm_ivf_request_plans_without_jobs(spark):
+    """The index build (seed collect, Lloyd recompute, lists count) must
+    stay off the request path: building a warm request's DataFrame
+    launches no Spark job, while running it does."""
+    planned, ran = _warm_build_jobs(spark, "knn_cosine_ivf_native")
     assert planned == []
     assert ran  # the tracker sees this group's jobs at all
+
+
+@pytest.mark.parametrize("name", ("gdelt_core_etl", "org_triangle_counts"))
+def test_warm_core_and_triangle_builds_run_no_jobs(spark, name):
+    """The gdelt core and the oriented org edges are built once per
+    corpus, so a warm build runs no job."""
+    planned, ran = _warm_build_jobs(spark, name)
+    assert planned == []
+    assert ran
+
+
+def _lineage(df) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_cached_core_and_edges_match_a_fresh_build(spark, sf_copy):
+    """The cached artifacts hold the rows a fresh build computes (the
+    fresh one reads a copy of the same file under another path, so no
+    cache entry can stand in for it), and neither is a checkpoint."""
+    core = etlq._core_df(spark, SF_SMOKE)
+    edges = graph._org_edges(spark, SF_SMOKE)
+    graph.count_triangles(edges).collect()  # fill both caches
+    fresh_core = etlq.build_gdelt_core(spark, sf_copy)
+    fresh_edges = graph.oriented_edges(graph._co_edges(fresh_core))
+    assert _rows(core) == _rows(fresh_core)
+    assert _rows(edges) == _rows(fresh_edges)
+    assert edges.storageLevel.useMemory and core.storageLevel.useMemory
+    for frame in (core, edges):
+        assert "CheckpointRDD" not in _lineage(frame)
+
+
+def test_rewritten_documents_rebuild_core_and_edges(spark, sf_copy):
+    specs = all_specs()
+    names = ("gdelt_core_etl", "org_triangle_counts")
+    before = {n: _rows(specs[n].build(spark, sf_copy)) for n in names}
+    shutil.copy(
+        f"{SF_ORACLE}/documents.parquet", f"{sf_copy}/documents.parquet"
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_copy}/documents.parquet')"
+    )
+    try:
+        for n in names:
+            df = specs[n].build(spark, sf_copy)
+            assert _rows(df) != before[n], n
+            assert_parity(df, specs[n].oracle, con, name=n)
+    finally:
+        con.close()
+
+
+def test_rewritten_part_file_of_directory_table_rebuilds(spark, tmp_path):
+    """A Spark-written table is a directory; rewriting one of its part
+    files in place leaves the directory's own size and mtime alone, and
+    must still rebuild the core."""
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    part = table / "part-00000.parquet"
+    shutil.copyfile(f"{SF_SMOKE}/documents.parquet", part)
+    sf_dir = str(tmp_path)
+    spec = all_specs()["gdelt_core_etl"]
+    before = _rows(spec.build(spark, sf_dir))
+    shutil.copyfile(f"{SF_ORACLE}/documents.parquet", part)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{part}')"
+    )
+    try:
+        df = spec.build(spark, sf_dir)
+        assert _rows(df) != before
+        assert_parity(df, spec.oracle, con, name=spec.name)
+    finally:
+        con.close()
+
+
+def test_clear_cache_rebuilds_core_and_edges(spark, sf_copy, monkeypatch):
+    builds = []
+    real_core, real_edges = etlq.build_gdelt_core, graph.oriented_edges
+
+    def core(spark, sf_dir):
+        builds.append("core")
+        return real_core(spark, sf_dir)
+
+    def edges(co_edges):
+        builds.append("edges")
+        return real_edges(co_edges)
+
+    monkeypatch.setattr(etlq, "build_gdelt_core", core)
+    monkeypatch.setattr(graph, "oriented_edges", edges)
+    before = _rows(graph.org_triangle_counts(spark, sf_copy))
+    graph.org_triangle_counts(spark, sf_copy).collect()
+    assert sorted(builds) == ["core", "edges"]
+    spark.catalog.clearCache()
+    after = _rows(graph.org_triangle_counts(spark, sf_copy))
+    assert sorted(builds) == ["core", "core", "edges", "edges"]
+    assert after == before
 
 
 def test_rewritten_documents_refresh_shingles(spark, sf_copy):

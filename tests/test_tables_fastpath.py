@@ -102,6 +102,31 @@ def test_schema_cache_invalidated_on_rewrite(spark, tmp_path):
     assert sorted(again.columns) == ["a", "b"]
 
 
+def test_directory_key_tracks_part_files_rewritten_in_place(tmp_path):
+    """A directory table is keyed by its data files: rewriting a part
+    file in place (the directory's own size and mtime unchanged) gives
+    a new key, while bookkeeping files do not."""
+    import os
+
+    import pandas as pd
+
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    part = table / "part-00000.parquet"
+    pd.DataFrame({"a": [1, 2]}).to_parquet(part)
+    (table / "_SUCCESS").write_text("")
+    key = tables._schema_cache_key(str(table))
+    dir_stat = os.stat(table)
+    pd.DataFrame({"a": [1, 2, 3]}).to_parquet(part)
+    os.utime(part, ns=(0, dir_stat.st_mtime_ns + 1))
+    assert os.stat(table).st_mtime_ns == dir_stat.st_mtime_ns
+    rewritten = tables._schema_cache_key(str(table))
+    assert rewritten != key
+    (table / "_SUCCESS").write_text("done")
+    (table / ".part-00000.parquet.crc").write_text("x")
+    assert tables._schema_cache_key(str(table)) == rewritten
+
+
 def test_nanos_conf_repinned_after_external_mutation(spark):
     # ADVICE r14: the canary must also cover nanosAsLong — the conf the
     # events READ depends on.
