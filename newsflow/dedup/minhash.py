@@ -377,7 +377,7 @@ def native_minhash_candidates_cms_planned(
     between two paths that produce identical pairs for it, so
     equality with the static plan is structural, not probabilistic
     (asserted anyway in tests/test_dedup.py, and measured at planted
-    10x/20x skew in scripts/stress_sketch_planning.py).
+    10x/20x skew; the figures are in BENCH_sf1.md).
 
     The "CMS never underestimates" leg of that argument holds ONLY
     when the sketch was built over the input signature rows (or a
@@ -636,8 +636,8 @@ def incremental_neardup_from_index(
     signature table, verify candidates. The probe and verify joins both
     broadcast the batch-sized side under AQE, so the index is scanned
     (columnar, pruned) but never shuffled — per-batch cost tracks batch
-    size plus one index scan, not a corpus re-pairing
-    (scripts/stress_incremental.py measures exactly this)."""
+    size plus one index scan, not a corpus re-pairing (BENCH_sf1.md
+    records a fixed-batch measurement of exactly this)."""
     index = index_sigs.select(F.col("doc_id").alias("doc_a"), "band", "key")
     if max_key_df is not None:
         hot = (

@@ -250,8 +250,7 @@ def minhash_near_dup_pairs_cms_planned(
     BEFORE any collect_list runs, making the per-task buffer bound
     structural instead of after-the-fact
     (dedup/minhash.py::native_minhash_candidates_cms_planned; planted
-    10x/20x skew measured in scripts/stress_sketch_planning.py +
-    BENCH_sf1.md round-12)."""
+    10x/20x skew measured in BENCH_sf1.md round-12)."""
     return minhash.native_minhash_near_dup_pairs_cms_planned(
         spread(load_table(spark, sf_dir, "documents")), n=3, threshold=0.8
     )

@@ -6,11 +6,6 @@ on token-count bounds, mean word length, alphabetic-word fraction,
 stopword presence, and repetition ratios. This module computes those
 signals as pure row-local Spark expressions with exact DuckDB twins —
 zero shuffle, parquet-scan speed at any corpus size.
-
-Registered LAST in the module order: the driver's 50-slot check window
-currently holds this round's never-green queries (see registry.py);
-these queue behind and enter the window in a later rotation. Local
-oracle parity covers them now.
 """
 
 from __future__ import annotations

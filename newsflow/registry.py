@@ -32,11 +32,7 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-# Modules that register queries on import. The driver oracle-checks a
-# 50-query prefix of the registry; since round 3 the prefix order is
-# DERIVED from CORRECTNESS_r*.json history (never-green first, then
-# least-recently-green — see ``schedule_order``), so module order only
-# breaks ties between queries with identical history.
+# Modules that register queries on import, imported in this order.
 _QUERY_MODULES = (
     "newsflow.dedup.queries",
     "newsflow.corpus",
@@ -55,8 +51,6 @@ _QUERY_MODULES = (
     "newsflow.ops.windows",
     "newsflow.ops.subqueries",
     "newsflow.ops.sampling",
-    # Last on purpose: new-this-round queries queue BEHIND the driver's
-    # 50-slot window until the current never-green set rotates out.
     "newsflow.quality",
     "newsflow.selection",
     "newsflow.takedown",
@@ -87,131 +81,12 @@ def register(
     return deco
 
 
-def _load_all_modules() -> None:
-    for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            # Module not built yet (incremental rounds) — skip.
-            pass
-
-
-# Queries whose SEMANTICS changed in _RECHECK_DECLARED_ROUND (round 3:
-# ADVICE fixes — cluster edge source, bounded contamination probes,
-# rounded-sim top-k ordering, full-PSL snapshot). They jump the queue so
-# the driver re-verifies the changed behavior even though they were
-# green before — and AUTO-EXPIRE: once a query has a green row in a
-# round >= the declared round, the fix is driver-verified and it falls
-# back to normal least-recently-green rotation, freeing its window slot.
-# This is the only hand-tended list left; everything else is derived
-# from the committed CORRECTNESS_r*.json history (never-green first,
-# then least-recently-green), so a new query can never silently sit
-# outside the driver's 50-slot window for more than ceil(N/50) rounds
-# (tests/test_registry_schedule.py proves the bound by simulation).
-_RECHECK_DECLARED_ROUND = 14
-_RECHECK_THIS_ROUND = (
-    # Round-14 freshness pins (VERDICT r13 Next #1): the 22 oracled
-    # queries last driver-green in round 9 — the oldest cohort left
-    # after round 13 cleared the r8 debt. Pinning jumps them to the
-    # front of the r14 window so the last-green histogram floor rises
-    # to r10; each auto-expires on its first green row in a round >= 14
-    # and returns to normal rotation. (The round-13 pins — the r8
-    # cohort — all went green in CORRECTNESS_r13 and have expired.)
-    "corpus_takedown_ffd_audit",
-    "customer_balance_quartiles",
-    "customer_order_histogram",
-    "daily_funnel_reconciliation",
-    "doc_corpus_shuffle",
-    "doc_hash_sample",
-    "doc_lang_id",
-    "doc_quality_scores",
-    "doc_stratified_sample",
-    "doc_token_stats",
-    "keep_first_dedup_agg",
-    "nsw_graph_edges",
-    "nsw_takedown_edges_audit",
-    "order_price_lag_rank",
-    "orders_above_global_avg",
-    "orders_approx_bounds",
-    "parts_above_brand_avg",
-    "quality_clf_sampled_teacher_eval",
-    "signup_days_gapfilled",
-    "topk_orders_per_priority",
-    "user_cumulative_value",
-    "user_moving_avg",
-)
-
-
-def _green_history() -> dict[str, int]:
-    """query name -> most recent round with a fully-green driver row,
-    read from the committed CORRECTNESS_r*.json files at the repo root.
-
-    Missing/unparseable files degrade to "never green" (round 0), which
-    only promotes queries toward the front — safe in every failure mode.
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    latest: dict[str, int] = {}
-    root = Path(__file__).resolve().parents[1]
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)$", p.stem)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-                and not row.get("err")
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def schedule_order(
-    names: list[str],
-    last_green: dict[str, int],
-    recheck: tuple[str, ...] = (),
-) -> list[str]:
-    """Deterministic window order for oracled queries: explicit rechecks
-    first, then never-green, then least-recently-green; registration
-    order breaks ties. Pure function so the rotation bound is testable
-    without driver history on disk."""
-    recheck_rank = {n: i for i, n in enumerate(recheck)}
-    return sorted(
-        names,
-        key=lambda n: (
-            0 if n in recheck_rank else 1,
-            recheck_rank.get(n, last_green.get(n, 0)),
-            names.index(n),
-        ),
-    )
-
-
 def all_specs() -> dict[str, QuerySpec]:
-    """All registered specs, oracled queries first in driver-window
-    priority order (see ``schedule_order``). No-oracle (rows-only)
-    queries sort last so they never occupy one of the driver's
-    hash-checked slots with a guaranteed ``no_oracle`` row (VERDICT r1 §4).
-    """
-    _load_all_modules()
-    oracled = [n for n, s in _REGISTRY.items() if s.oracle]
-    history = _green_history()
-    recheck = tuple(
-        n
-        for n in _RECHECK_THIS_ROUND
-        if history.get(n, 0) < _RECHECK_DECLARED_ROUND
-    )
-    order = schedule_order(oracled, history, recheck)
-    ordered = {n: _REGISTRY[n] for n in order}
+    """All registered specs: oracled queries in registration order, then
+    the no-oracle (rows-only) ones."""
+    for mod in _QUERY_MODULES:
+        importlib.import_module(mod)
+    ordered = {n: s for n, s in _REGISTRY.items() if s.oracle}
     ordered.update({n: s for n, s in _REGISTRY.items() if not s.oracle})
     return ordered
 

@@ -246,17 +246,18 @@ def nsw_search_df(
         barrier job anyway)."""
         if not pruned:
             return frame.localCheckpoint(eager=True), None
-        rows = frame.select(
-            "query_id",
-            "node",
-            "sim",
-            graph_bucket_expr("node", n_buckets).alias("b"),
+        cols = frame.select("query_id", "node", "sim")
+        rows = cols.withColumn(
+            "b", graph_bucket_expr("node", n_buckets)
         ).collect()
+        ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in cols.schema
+        )
         return (
             local_df(
                 spark,
                 [(r["query_id"], r["node"], r["sim"]) for r in rows],
-                "query_id long, node long, sim double",
+                ddl,
             ),
             sorted({r["b"] for r in rows}),
         )

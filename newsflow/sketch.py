@@ -325,7 +325,7 @@ def cms_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ~0.2%). Past that design point, use the SHARDED form below
 # (bloom_build_sharded: n_shards x this same 4096-bit geometry,
 # ~BLOOM_BITS_PER_KEY bits/key at any n) — the fixed bitmap saturates,
-# measured at 20x keys in scripts/stress_bloom.py (FPR -> 100%).
+# measured at 20x keys in BENCH_sf1.md (FPR -> 100%).
 BLOOM_SALTS = ("bf0:", "bf1:", "bf2:", "bf3:")
 BLOOM_WORDS = 128
 BLOOM_BITS_PER_WORD = 32

@@ -1102,10 +1102,11 @@ def minhash_near_dup_pairs_cms_streamed(
     documents table the query then reads, so the sketch incidentally
     always covers the input and the guard's demotion branch cannot
     fire here — its live exercise (planted stale state, provable
-    unguarded divergence) is scripts/stress_sketch_planning.py and
-    tests/test_dedup.py. The guard's extra count/min aggregation is
-    paid regardless; that is the production posture being demonstrated
-    — a real deployment cannot know its sketch is fresh."""
+    unguarded divergence) is tests/test_dedup.py and the planted-skew
+    run recorded in BENCH_sf1.md. The guard's extra count/min
+    aggregation is paid regardless; that is the production posture
+    being demonstrated — a real deployment cannot know its sketch is
+    fresh."""
     from newsflow.dedup import minhash
     from newsflow.streaming.ingest import (
         plan_cms_ingest_stream,

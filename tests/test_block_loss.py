@@ -14,8 +14,13 @@ from tests.oracle_utils import assert_parity
 
 BLOCK_LOSS_QUERIES = (
     "gdelt_core_etl",
+    "gdelt_top_sources",
     "org_triangle_counts",
+    "org_pagerank",
     "knn_cosine_ivf_native",
+    "knn_cosine_filtered",
+    "knn_filtered_recall_eval",
+    "knn_ivf_recall_eval",
 )
 
 

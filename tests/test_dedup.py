@@ -347,7 +347,7 @@ def test_star_capped_buckets_preserve_viral_drop_set(spark):
     K-1 representative pairs instead of K(K-1)/2 — and the keep-smallest
     drop outcome is unchanged, because every member still verifies
     against its bucket's min-id representative
-    (scripts/stress_skew_neardup.py measures the same at K=2000)."""
+    (BENCH_sf1.md records the same at K=2000)."""
     import pyspark.sql.functions as F
 
     from newsflow.dedup import minhash

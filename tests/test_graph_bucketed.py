@@ -13,6 +13,7 @@ import hashlib
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from newsflow.sim.nsw import (
     GRAPH_BUCKETS,
@@ -384,12 +385,14 @@ def test_rebuild_from_vector_store(spark, tmp_path):
     assert _edge_set(read_graph_edges(spark, graph)) == expected
 
 
-def test_hop_pruned_search_matches_full_reads(spark, tmp_path):
+@pytest.mark.parametrize("qid_type", ["long", "int", "string"])
+def test_hop_pruned_search_matches_full_reads(spark, tmp_path, qid_type):
     """r15 hop pruning: `nsw_search_df` with a bucket-pruned hop reader
-    must return exactly the rows of the full-read form, the per-hop
-    gate must engage when the frontier is selective, and the pruned
-    relation's scan must carry the bucket partition filter (the 100 TB
-    frontier-proportional-I/O evidence)."""
+    must return exactly the rows and schema of the full-read form for
+    any ``query_id`` type, the per-hop gate must engage when the
+    frontier is selective, and the pruned relation's scan must carry
+    the bucket partition filter (the 100 TB frontier-proportional-I/O
+    evidence)."""
     from newsflow.sim.nsw import nsw_search_df
 
     emb = _emb(spark, n=80)
@@ -412,7 +415,7 @@ def test_hop_pruned_search_matches_full_reads(spark, tmp_path):
 
     queries = _emb(spark, n=90).filter(F.col("vec_id") >= 80)
     qs = _unit(queries, "vec_id").select(
-        F.col("vec_id").alias("query_id"), "u"
+        F.col("vec_id").cast(qid_type).alias("query_id"), "u"
     )
     edges = read_graph_edges(spark, graph_path)
     full = nsw_search_df(units, edges, qs, ef=8, hops=3, n_entries=4)
@@ -420,6 +423,7 @@ def test_hop_pruned_search_matches_full_reads(spark, tmp_path):
         units, edges, qs, ef=8, hops=3, n_entries=4,
         hop_edges=hop_edges, n_buckets=n_buckets,
     )
+    assert pruned.schema == full.schema
     rows_full = {tuple(r) for r in full.collect()}
     rows_pruned = {tuple(r) for r in pruned.collect()}
     assert rows_pruned == rows_full
