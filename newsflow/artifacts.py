@@ -38,6 +38,14 @@ The kinds held here, and their users:
 - ``org_edges`` (documents; `graph._org_edges`): the degree-ordered
   undirected org co-mention edges, built from ``gdelt_core`` —
   `org_triangle_counts`.
+- ``curated`` (documents; `curation.cached_curated`): the curation
+  funnel's keeper table — the exact-dedup keepers of the quality and
+  language gate with their near-dup flag, no text —
+  `corpus_curation_kept`, `corpus_curation_funnel` and
+  `corpus_pipeline_e2e`.
+- ``dsir_weights`` (documents; `selection.cached_dsir_weights`): the
+  per-document DSIR importance weights — `dsir_importance_weights`,
+  `dsir_top_docs` and `corpus_pipeline_e2e`.
 - ``ivf_native`` (embeddings; `sim.ivf.cached_native_ivf_index`): the
   deterministic-quantizer IVF index — `knn_cosine_ivf_native`,
   `knn_cosine_filtered`, `knn_ivf_recall_eval`,

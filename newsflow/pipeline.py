@@ -1,11 +1,11 @@
 """The composed full-funnel training-data pipeline as ONE query:
-curate → DSIR-select → pack, with reuse barriers exactly where
-measurement says they pay.
+curate → DSIR-select → pack, over the corpus-level artifacts it shares
+with the single-stage queries.
 
 The per-query benchmark measures operators in isolation; a production
-pretraining pipeline runs them as one lazy composition with explicit
-reuse barriers where they pay off. This module is that composition plus
-the oracled stage-count funnel that proves each stage's yield:
+pretraining pipeline runs them as one composition. This module is that
+composition plus the oracled stage-count funnel that proves each
+stage's yield:
 
     0_total           raw corpus
     1_quality_lang    quality ≥ threshold AND lang gate     (curation)
@@ -14,33 +14,39 @@ the oracled stage-count funnel that proves each stage's yield:
     4_dsir_selected   top-N by DSIR importance weight       (selection)
     5_packed          fixed-SEQ_LEN sequence count spanned  (packing)
 
-Plan-reuse mechanics — measured, including a negative result worth
-recording. Round-7 first shipped this with a cached fat tokenized base
-(doc_id, lang, source, text, t) shared by every stage: it LOST to
-recompute by ~3× on the DSIR stage (1.5 s from parquet+codegen vs
-5.0 s reading the cached token arrays at sf0.1). Tokens-as-compute
-beats tokens-as-data: a whole-stage-codegen regexp over dictionary-
-decoded parquet strings is cheaper than deserializing materialized
-array<string> cache blocks — the same class of lesson as the r6
-expression-inlining barrier, from the opposite direction. The shipped
-form therefore lets each corpus-pass stage fuse its own row-local
-tokenize into its scan, and places reuse barriers only where a SMALL
-product is consumed repeatedly: `localCheckpoint` on the keeper table
-(4 consumers) and on the {PIPELINE_SELECT_N}-row selection (3
-consumers — without the barrier the dedup+DSIR chain re-executes per
-consumer; measured 12.9 s → 6.4 s at sf0.1).
+Materialization rule. Everything a call reads that depends only on the
+corpus is a corpus-level artifact, built once per session and
+documents file by `newsflow.artifacts` and persisted over its own RDD
+(`artifacts.persisted`, lineage kept, no checkpoint): the keeper table
+behind stages 2 and 3 (`curation.cached_curated`, with the MinHash
+near-dup flag) and the DSIR weights behind stage 4
+(`selection.cached_dsir_weights`). A call reads them, scans the corpus
+once for stages 0 and 1, and builds its DataFrame without a Spark
+job. No intermediate of the call itself is
+materialized: the PIPELINE_SELECT_N-row selection has one consumer,
+the packing window, whose one aggregation yields stages 4 and 5, and a
+lost cached block recomputes from lineage instead of failing the call.
 
-Scale shape at 100 TB: three corpus passes (stage-0/1 aggregate,
-exact-dedup groupBy, DSIR featurize), each fusing tokenize into its
-scan; the exact dedup stage is the min_by hash aggregation (map-side
-partial combine ships one candidate struct per hash per partition —
-never the min-over-window form, which would shuffle every fat row);
-the near-dup drop list is pair-bounded and broadcast; the DSIR model
-tables are bucket-bounded broadcasts; stage 4's selection is
-orderBy+limit (TakeOrderedAndProject) and stage 5 packs only the N
-selected rows. The keeper checkpoint is keeper-corpus-sized — at
-100 TB swap it for a persisted parquet intermediate (the
-merge/compact layer's job), same barrier, durable form.
+An earlier form cached a fat tokenized base (doc_id, lang, source,
+text, t) shared by every stage; it LOST to recompute by ~3× on the DSIR
+stage (1.5 s from parquet+codegen vs 5.0 s reading the cached token
+arrays at sf0.1): a whole-stage-codegen regexp over dictionary-decoded
+parquet strings is cheaper than deserializing materialized
+array<string> cache blocks. The artifacts therefore hold products, not
+tokens: the keeper table carries no text and the weights one row per
+document.
+
+Scale shape at 100 TB: two corpus passes per corpus (exact-dedup
+groupBy, DSIR featurize) and one per call (the stage-0/1 aggregate),
+each fusing tokenize into its scan; the exact dedup stage is the min_by hash
+aggregation (map-side partial combine ships one candidate struct per
+hash per partition — never the min-over-window form, which would
+shuffle every fat row); the DSIR model tables are bucket-bounded
+broadcasts; stage 4's selection is orderBy+limit
+(TakeOrderedAndProject) and stage 5 packs only the N selected rows.
+The artifacts are keeper-corpus-sized and corpus-sized: at 100 TB
+write them as parquet intermediates (the merge/compact layer's job),
+same rule, durable form.
 
 Reference parity: composes the reference's filter→dedup→report ETL
 (`build_datasets.py` stages) with the selection/packing stages a
@@ -56,20 +62,15 @@ from pyspark.sql.window import Window
 
 from newsflow.curation import (
     _FUNNEL_CTES,
-    KEEP_LANGS,
-    NEAR_DUP_JACCARD,
-    QUALITY_THRESHOLD,
     SEQ_LEN,
-    _scored,
+    cached_curated,
+    funnel_totals,
     pack_shard_expr,
     sql_pack_shard,
 )
-from newsflow.dedup import minhash
-from newsflow.dedup.core import doc_shingle_arrays
 from newsflow.functions.text import sql_tokens
 from newsflow.registry import register
-from newsflow.selection import _DSIR_WEIGHTS_ORACLE, _dsir_weights
-from newsflow.tables import load_table, spread
+from newsflow.selection import _DSIR_WEIGHTS_ORACLE, cached_dsir_weights
 
 PIPELINE_SELECT_N = 100
 
@@ -123,66 +124,19 @@ PIPELINE_SELECT_N = 100
     tags=("curation", "selection", "packing", "pipeline"),
 )
 def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full training-data funnel as one composed lazy plan — see
-    module docstring for stages, plan-reuse mechanics, and scale shape.
-    Stage-5 ``docs`` counts the distinct (shard, pack) sequences the
-    selected slice spans; its ``tokens`` equals stage 4's (packing is
-    token-conserving — the conservation check rides in the oracle)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    scored = _scored(docs)
-    passes = (F.col("q") >= F.lit(QUALITY_THRESHOLD)) & F.col("lang").isin(
-        *KEEP_LANGS
-    )
-    # Exact dedup via min_by HASH AGGREGATION, not a min-over-window:
-    # the window form shuffles every fat row by text hash; min_by's
-    # map-side partial combine ships ONE candidate struct per (hash,
-    # input partition) — the `curate_exact_stage` scale argument. Only
-    # the columns the downstream stages need ride in the struct.
-    # localCheckpoint barrier: four consumers (near-dup arrays, stage-2
-    # aggregate, and `final`'s two consumers) would otherwise each
-    # re-run the scan+score+shuffle chain.
-    filtered = scored.filter(passes)
-    row = F.struct("doc_id", "n_tokens", "text")
-    kept = (
-        filtered.groupBy(F.md5("text").alias("text_hash"))
-        .agg(F.min_by(row, F.col("doc_id")).alias("r"))
-        .select("r.*")
-        .localCheckpoint(eager=True)
-    )
-    arrays_kept = doc_shingle_arrays(kept, 3)
-    pairs = minhash._verify_pairs(
-        arrays_kept,
-        minhash.native_minhash_candidates(arrays_kept),
-        threshold=NEAR_DUP_JACCARD,
-    )
-    # pair-bounded drop list, LAZY-checkpointed (r15 stage profile):
-    # `final` is consumed both by `selected`'s barrier (build time) and
-    # by the stage-3 aggregate (action time), so without a barrier the
-    # whole minhash candidate+verify chain executes twice per query —
-    # at 100 TB that is a second full pass over the keeper corpus. The
-    # first consumer is `selected`'s EAGER checkpoint below, so the
-    # drop list (and the minhash chain behind it) materializes while
-    # the query is being built, not inside the action; the stage-3
-    # aggregate then reuses the checkpointed handful of ids.
-    dropped = (
-        pairs.select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # pair-bounded -> broadcast anti join, no shuffle of the keepers
-    final = kept.join(F.broadcast(dropped), "doc_id", "left_anti")
-
-    weights = _dsir_weights(docs)
-    # 100-row barrier: the three downstream consumers (selection
-    # aggregate, packing window, sequence count) re-execute the whole
-    # dedup+DSIR chain without it (measured 12.9 s -> 6.4 s at sf0.1).
+    """The full training-data funnel as one composed plan — see the
+    module docstring for its stages, materialization rule and scale
+    shape. Stage-5 ``docs`` counts the distinct (shard, pack) sequences
+    the selected slice spans; its ``tokens`` equals stage 4's (packing
+    is token-conserving — the conservation check rides in the oracle)."""
+    final = cached_curated(spark, sf_dir).filter(~F.col("near_dup"))
+    weights = cached_dsir_weights(spark, sf_dir)
     selected = (
         final.select("doc_id", "n_tokens")
         .join(weights.select("doc_id", "log_weight"), "doc_id")
         .orderBy(F.desc("log_weight"), F.asc("doc_id"))
         .limit(PIPELINE_SELECT_N)
         .select("doc_id", F.col("n_tokens").cast("long").alias("n_tokens"))
-        .localCheckpoint(eager=True)
     )
     h = F.md5(F.col("doc_id").cast("string"))
     packed = selected.select(
@@ -199,38 +153,19 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     off = packed.withColumn(
         "tok_off", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     )
-
-    # Stage totals: 0/1 come from ONE corpus pass (the pass flag is a
-    # row-local conditional); 2/3 aggregate the checkpointed keeper
-    # table and its broadcast-anti product.
-    s01 = scored.agg(
-        F.count(F.lit(1)).cast("long").alias("d0"),
-        F.sum("n_tokens").cast("long").alias("t0"),
-        F.count_if(passes).cast("long").alias("d1"),
-        F.sum(F.when(passes, F.col("n_tokens"))).cast("long").alias("t1"),
-    )
-    s2 = kept.agg(
-        F.count(F.lit(1)).cast("long").alias("d2"),
-        F.sum("n_tokens").cast("long").alias("t2"),
-    )
-    s3 = final.agg(
-        F.count(F.lit(1)).cast("long").alias("d3"),
-        F.sum("n_tokens").cast("long").alias("t3"),
-    )
-    funnel_agg = s01.crossJoin(s2).crossJoin(s3)
-    sel_agg = selected.agg(
+    # One row per selected document: stage 4 and stage 5 come from one
+    # aggregation of the packing window.
+    sel_agg = off.agg(
         F.count(F.lit(1)).cast("long").alias("d4"),
         F.sum("n_tokens").cast("long").alias("t4"),
-    )
-    seq_agg = off.agg(
         F.countDistinct(
             F.col("shard") * 1000000
             + F.expr(f"tok_off div {SEQ_LEN}")
         )
         .cast("long")
-        .alias("d5")
+        .alias("d5"),
     )
-    wide = funnel_agg.crossJoin(sel_agg).crossJoin(seq_agg)
+    wide = funnel_totals(spark, sf_dir).crossJoin(sel_agg)
     return wide.selectExpr(
         "stack(6, '0_total', d0, t0, '1_quality_lang', d1, t1, "
         "'2_exact_dedup', d2, t2, '3_near_dup', d3, t3, "

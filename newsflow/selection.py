@@ -33,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
+from newsflow import artifacts
 from newsflow.functions.scalars import dround, sql_dround
 from newsflow.functions.text import sql_tokens, tokens_expr
 from newsflow.registry import register
@@ -65,10 +66,13 @@ def _sql_bucket(col: str) -> str:
     return f"CAST({nib[0]} * 256 + {nib[1]} * 16 + {nib[2]} AS INT)"
 
 
-def _feature_buckets_from_tokens(base: DataFrame) -> DataFrame:
-    """`_feature_buckets` over a pre-tokenized (doc_id, lang, t) frame —
-    shares the pipeline's single tokenize pass (`newsflow.pipeline`)."""
-    toks = base.select("doc_id", "lang", "t").filter(F.size("t") > 0)
+def _feature_buckets(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, bucket): one row per hashed unigram+bigram
+    occurrence — the DSIR feature stream, row-local (explode + md5,
+    no shuffle)."""
+    toks = docs.select(
+        "doc_id", "lang", tokens_expr("text").alias("t")
+    ).filter(F.size("t") > 0)
     bigrams = F.expr(
         "CASE WHEN size(t) >= 2 THEN "
         "transform(sequence(1, size(t) - 1),"
@@ -81,15 +85,6 @@ def _feature_buckets_from_tokens(base: DataFrame) -> DataFrame:
         F.explode(F.concat(F.col("t"), bigrams)).alias("f"),
     )
     return feats.select("doc_id", "lang", _bucket_expr("f").alias("bucket"))
-
-
-def _feature_buckets(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, bucket): one row per hashed unigram+bigram
-    occurrence — the DSIR feature stream, row-local (explode + md5,
-    no shuffle)."""
-    return _feature_buckets_from_tokens(
-        docs.select("doc_id", "lang", tokens_expr("text").alias("t"))
-    )
 
 
 _SQL_FEATS = f"""
@@ -144,12 +139,9 @@ _DSIR_WEIGHTS_ORACLE = f"""
 """
 
 
-def _dsir_weights(docs: DataFrame, *, from_tokens: bool = False) -> DataFrame:
-    feats = (
-        _feature_buckets_from_tokens(docs)
-        if from_tokens
-        else _feature_buckets(docs)
-    )
+def _dsir_weights(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_features, log_weight), built fresh from ``docs``."""
+    feats = _feature_buckets(docs)
     # ONE (doc, bucket)-keyed aggregation feeds BOTH the bucket count
     # tables AND the final per-doc weighting: the bucket-count branch
     # now consumes per-doc PRE-AGGREGATED rows instead of re-exploding
@@ -199,6 +191,25 @@ def _dsir_weights(docs: DataFrame, *, from_tokens: bool = False) -> DataFrame:
     )
 
 
+def cached_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The DSIR weights of sf_dir's documents, one cached frame per
+    corpus (newsflow.artifacts): `dsir_importance_weights`,
+    `dsir_top_docs` and `corpus_pipeline_e2e` read it instead of
+    re-running the featurize pass and its three aggregations per call.
+    Building it runs those shuffle stages; the first action that reads
+    it fills the cache (`artifacts.persisted`)."""
+
+    def build():
+        weights = artifacts.persisted(
+            _dsir_weights(spread(load_table(spark, sf_dir, "documents")))
+        )
+        return weights, (weights,)
+
+    return artifacts.get(
+        spark, "dsir_weights", sf_dir, ("documents",), build
+    )
+
+
 @register(
     "dsir_importance_weights",
     oracle=_DSIR_WEIGHTS_ORACLE,
@@ -211,7 +222,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive means "looks more like the target domain than the corpus
     average" — the score DSIR resamples by. See module docstring for
     the determinism recipe and scale shape."""
-    return _dsir_weights(spread(load_table(spark, sf_dir, "documents")))
+    return cached_dsir_weights(spark, sf_dir)
 
 
 @register(
@@ -239,9 +250,8 @@ def dsir_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-pattern the round-4 sweep removed). The rank column is
     assigned AFTER the limit, over the {DSIR_TOP_N} surviving rows
     only — a bounded window, same class as the recall band tables."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
     top = (
-        _dsir_weights(docs)
+        cached_dsir_weights(spark, sf_dir)
         .orderBy(F.desc("log_weight"), F.asc("doc_id"))
         .limit(DSIR_TOP_N)
     )

@@ -1,8 +1,9 @@
 """The session-scoped artifact cache (newsflow/artifacts.py) and what it
-holds — the IVF index, the gdelt core and the oriented org edges: a
-cached artifact answers exactly like a fresh build, it is built once per
-corpus, and a changed file, a cleared cache or a stopped application
-each lead to the right rebuild or drop."""
+holds — the IVF index, the gdelt core, the oriented org edges, the
+curation keeper table and the DSIR weights: a cached artifact answers
+exactly like a fresh build, it is built once per corpus, and a changed
+file, a cleared cache or a stopped application each lead to the right
+rebuild or drop."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import shutil
 import duckdb
 import pytest
 
-from newsflow import artifacts, graph
+from newsflow import artifacts, curation, graph, selection
 from newsflow.etl import queries as etlq
 from newsflow.registry import all_specs
 from newsflow.sim import ivf
@@ -171,6 +172,18 @@ def test_warm_core_and_triangle_builds_run_no_jobs(spark, name):
     assert ran
 
 
+@pytest.mark.parametrize(
+    "name", ("corpus_pipeline_e2e", "corpus_curation_kept")
+)
+def test_warm_funnel_builds_run_no_jobs(spark, name):
+    """The keeper table and the DSIR weights are built once per corpus,
+    and no call materializes an intermediate of its own while it is
+    being built, so a warm build runs no job."""
+    planned, ran = _warm_build_jobs(spark, name)
+    assert planned == []
+    assert ran
+
+
 def _lineage(df) -> str:
     return df._jdf.queryExecution().toRdd().toDebugString()
 
@@ -321,3 +334,76 @@ def test_concurrent_cold_requests_build_once(spark, sf_copy):
     assert not any(t.is_alive() for t in threads)
     assert len(builds) == 1
     assert len(got) == 16 and len({id(v) for v in got}) == 1
+
+
+def test_cached_keepers_and_weights_match_a_fresh_build(spark, sf_copy):
+    """The cached keeper table and DSIR weights hold the rows a fresh
+    build over a copy of the file computes, and neither is a
+    checkpoint."""
+    curated = curation.cached_curated(spark, SF_SMOKE)
+    weights = selection.cached_dsir_weights(spark, SF_SMOKE)
+    docs = load_table(spark, sf_copy, "documents")
+    fresh_curated = curation.build_curated(docs)
+    fresh_weights = selection._dsir_weights(spread(docs))
+    assert _rows(curated) == _rows(fresh_curated)
+    assert _rows(weights) == _rows(fresh_weights)
+    assert curated.storageLevel.useMemory and weights.storageLevel.useMemory
+    for frame in (curated, weights):
+        assert "CheckpointRDD" not in _lineage(frame)
+
+
+FUNNEL_QUERIES = (
+    "corpus_pipeline_e2e",
+    "corpus_curation_kept",
+    "dsir_importance_weights",
+)
+
+
+def test_rewritten_documents_rebuild_keepers_and_weights(spark, sf_copy):
+    specs = all_specs()
+    before = {
+        n: _rows(specs[n].build(spark, sf_copy)) for n in FUNNEL_QUERIES
+    }
+    shutil.copy(
+        f"{SF_ORACLE}/documents.parquet", f"{sf_copy}/documents.parquet"
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_copy}/documents.parquet')"
+    )
+    try:
+        for n in FUNNEL_QUERIES:
+            df = specs[n].build(spark, sf_copy)
+            assert _rows(df) != before[n], n
+            assert_parity(df, specs[n].oracle, con, name=n)
+    finally:
+        con.close()
+
+
+def test_clear_cache_rebuilds_keepers_and_weights(
+    spark, sf_copy, monkeypatch
+):
+    from newsflow.pipeline import corpus_pipeline_e2e
+
+    builds = []
+    real_curated = curation.build_curated
+    real_weights = selection._dsir_weights
+
+    def curated(docs):
+        builds.append("curated")
+        return real_curated(docs)
+
+    def weights(docs):
+        builds.append("weights")
+        return real_weights(docs)
+
+    monkeypatch.setattr(curation, "build_curated", curated)
+    monkeypatch.setattr(selection, "_dsir_weights", weights)
+    before = _rows(corpus_pipeline_e2e(spark, sf_copy))
+    corpus_pipeline_e2e(spark, sf_copy).collect()
+    assert sorted(builds) == ["curated", "weights"]
+    spark.catalog.clearCache()
+    after = _rows(corpus_pipeline_e2e(spark, sf_copy))
+    assert sorted(builds) == ["curated", "curated", "weights", "weights"]
+    assert after == before

@@ -21,6 +21,9 @@ BLOCK_LOSS_QUERIES = (
     "knn_cosine_filtered",
     "knn_filtered_recall_eval",
     "knn_ivf_recall_eval",
+    "corpus_pipeline_e2e",
+    "corpus_curation_kept",
+    "dsir_importance_weights",
 )
 
 

@@ -14,9 +14,12 @@ from tests.conftest import SF_ORACLE
 SPECS = registry.all_specs()
 
 
-def plan_of(spark, name: str) -> str:
-    df = SPECS[name].build(spark, SF_ORACLE)
+def executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def plan_of(spark, name: str) -> str:
+    return executed_plan(SPECS[name].build(spark, SF_ORACLE))
 
 
 def test_star_join_broadcasts_dimensions(spark):
@@ -115,8 +118,13 @@ def test_q3_shape_broadcasts_dim_and_takes_ordered(spark):
 def test_curation_lang_gate_pushed_to_scan(spark):
     """The curation funnel's language filter must reach the parquet scan
     (cheap gates below everything), and the whole pipeline must stay
-    JVM-side."""
-    plan = plan_of(spark, "corpus_curation_kept")
+    JVM-side. The gate runs where the keeper table is built; the
+    registered query reads the cached table."""
+    from newsflow.curation import build_curated
+    from newsflow.tables import load_table
+
+    docs = load_table(spark, SF_ORACLE, "documents")
+    plan = executed_plan(build_curated(docs))
     assert "EqualTo(lang,en)" in plan
     for stage in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert stage not in plan
@@ -327,8 +335,13 @@ def test_incremental_neardup_no_cartesian_udf_free(spark):
 def test_dsir_ratio_join_broadcasts(spark):
     """The bucket log-ratio table (<= 4096 rows by construction) must
     broadcast onto the per-doc bucket counts — the corpus-sized side
-    never shuffles for the ratio attach."""
-    plan = plan_of(spark, "dsir_importance_weights")
+    never shuffles for the ratio attach. The join runs where the
+    weights are built; the registered query reads the cached weights."""
+    from newsflow.selection import _dsir_weights
+    from newsflow.tables import load_table, spread
+
+    docs = spread(load_table(spark, SF_ORACLE, "documents"))
+    plan = executed_plan(_dsir_weights(docs))
     assert "BroadcastHashJoin" in plan
     for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert py not in plan
