@@ -30,6 +30,24 @@ Only the artifact is shared. Each request still reads its own inputs and
 runs its own plan over the artifact, so results are those of a fresh
 build.
 
+When to materialize an intermediate result. A registry query returns a
+lazy DataFrame and its caller runs the action, so a query cannot release
+what it persisted: a query-scoped ``cache()``/``persist()`` leaks, and
+because a table rewritten in place plans like the old one, the leaked
+frame is served as the new file's data. An eager ``localCheckpoint``
+cuts the lineage, so a lost block fails the query instead of
+recomputing. That leaves three legal forms:
+
+1. Corpus-level state goes in this cache, built through `persisted`.
+2. Reuse within one request uses no barrier: rely on Catalyst's
+   ``ReusedExchange``, and accept a recompute where it does not fire.
+3. Request-level state that measurably pays becomes an artifact keyed on
+   the request's parameters too.
+
+`tests/test_materialization_sites.py` counts the remaining
+``cache``/``persist``/``localCheckpoint`` calls per file against an
+allowlist that may only shrink.
+
 The kinds held here, and their users:
 
 - ``gdelt_core`` (documents; `etl.queries._core_df`): the gdelt core
@@ -56,7 +74,11 @@ The kinds held here, and their users:
   the 3-gram shingle projection — `dedup_lsh_recall_eval`,
   `near_dup_cluster_agreement`, `split_leakage_audit`,
   `corpus_cluster_split`, `corpus_takedown_audit`,
-  `corpus_takedown_ffd_audit`.
+  `corpus_takedown_ffd_audit`, and through
+  `dedup.queries._verified_pairs` the MinHash pair queries
+  (`minhash_near_dup_pairs`, its `_cms_planned`, `_cms_streamed` and
+  `_mllib` forms), `near_dup_clusters_lsh` and
+  `streaming_takedown_exec`.
 - ``quality_clf`` and ``quality_clf/sampled`` (documents;
   `ml.quality_clf`): the fitted quality-classifier weights —
   `quality_clf_coefficients`, `quality_clf_filter_eval` and

@@ -32,16 +32,14 @@ def _lsh_candidates(
     num_features: int,
     seed: int,
 ) -> DataFrame:
-    """Candidate pairs from cached shingle-array rows (doc_a < doc_b)."""
+    """Candidate pairs from shingle-array rows (doc_a < doc_b)."""
     tf = HashingTF(
         inputCol="shingles",
         outputCol="features",
         numFeatures=num_features,
         binary=True,
     )
-    # Cache: the self-join reads `feats` twice and any recompute repeats
-    # the tokenize/shingle projection over the full corpus.
-    feats = tf.transform(arrays).cache()
+    feats = tf.transform(arrays)
 
     lsh = MinHashLSH(
         inputCol="features",
@@ -81,7 +79,7 @@ def minhash_candidates(
 def _verify_pairs(
     arrays: DataFrame, cands: DataFrame, threshold: float
 ) -> DataFrame:
-    """Exact Jaccard verification of candidate pairs against the cached
+    """Exact Jaccard verification of candidate pairs against the
     shingle arrays (shared by the MLlib and native LSH paths).
 
     Set intersection runs as `array_intersect` directly on the per-doc
@@ -110,6 +108,26 @@ def _verify_pairs(
     )
 
 
+def mllib_candidates(
+    arrays: DataFrame,
+    threshold: float = 0.8,
+    num_hash_tables: int = 8,
+    num_features: int = 1 << 18,
+    seed: int = 42,
+) -> DataFrame:
+    """MinHashLSH candidate pairs from shingle-array rows, for exact
+    verification at Jaccard ``threshold``."""
+    return _lsh_candidates(
+        arrays,
+        num_hash_tables,
+        # distance = 1 - jaccard; leave slack below the verify threshold so
+        # approximate MinHash distance never prunes a true positive.
+        min(1.0, (1.0 - threshold) + 0.15),
+        num_features,
+        seed,
+    )
+
+
 def minhash_near_dup_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -120,18 +138,9 @@ def minhash_near_dup_pairs(
 ) -> DataFrame:
     """LSH candidates + exact Jaccard verification — same output contract
     as `core.jaccard_pairs` but with LSH-bounded join fan-out."""
-    # One cached projection feeds the LSH features, the exploded shingle
-    # pairs for verification, AND the set sizes (size(shingles), no
-    # groupBy) — the shingle pipeline runs exactly once.
-    arrays = doc_shingle_arrays(docs, n).cache()
-    cands = _lsh_candidates(
-        arrays,
-        num_hash_tables,
-        # distance = 1 - jaccard; leave slack below the verify threshold so
-        # approximate MinHash distance never prunes a true positive.
-        min(1.0, (1.0 - threshold) + 0.15),
-        num_features,
-        seed,
+    arrays = doc_shingle_arrays(docs, n)
+    cands = mllib_candidates(
+        arrays, threshold, num_hash_tables, num_features, seed
     )
     return _verify_pairs(arrays, cands, threshold)
 
@@ -534,7 +543,7 @@ def native_minhash_near_dup_pairs_cms_planned(
     untrusted-sketch lag guard keeps the output identical even when
     that state lags the corpus (see
     `native_minhash_candidates_cms_planned`)."""
-    arrays = doc_shingle_arrays(docs, n).cache()
+    arrays = doc_shingle_arrays(docs, n)
     cands = native_minhash_candidates_cms_planned(
         arrays,
         num_hashes,
@@ -559,7 +568,7 @@ def native_minhash_near_dup_pairs(
     contract (and, given recall 1, identical output) to
     `minhash_near_dup_pairs`, at a fraction of the cost — no vector
     construction, no Python/MLlib model, every stage codegen'd."""
-    arrays = doc_shingle_arrays(docs, n).cache()
+    arrays = doc_shingle_arrays(docs, n)
     cands = native_minhash_candidates(
         arrays, num_hashes, rows_per_band, max_bucket, oversize
     )

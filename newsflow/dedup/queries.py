@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -227,9 +229,7 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native-expression MinHash near-dup pairs (the scale path):
     xxhash64 min-signatures + signature self-join + exact verification —
     ~3x the MLlib MinHashLSH variant's throughput, identical output."""
-    return minhash.native_minhash_near_dup_pairs(
-        spread(load_table(spark, sf_dir, "documents")), n=3, threshold=0.8
-    )
+    return _verified_pairs(spark, sf_dir, minhash.native_minhash_candidates)
 
 
 @register(
@@ -251,8 +251,8 @@ def minhash_near_dup_pairs_cms_planned(
     structural instead of after-the-fact
     (dedup/minhash.py::native_minhash_candidates_cms_planned; planted
     10x/20x skew measured in BENCH_sf1.md round-12)."""
-    return minhash.native_minhash_near_dup_pairs_cms_planned(
-        spread(load_table(spark, sf_dir, "documents")), n=3, threshold=0.8
+    return _verified_pairs(
+        spark, sf_dir, minhash.native_minhash_candidates_cms_planned
     )
 
 
@@ -278,6 +278,19 @@ def _shared_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _verified_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    candidates: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Near-dup pairs of the documents table at Jaccard >= 0.8:
+    ``candidates`` over the shared shingle projection, verified by exact
+    Jaccard. Reading the artifact, not a query-scoped ``.cache()``, is
+    what makes a rewritten documents file rebuild the projection."""
+    arrays = _shared_shingle_arrays(spark, sf_dir)
+    return minhash._verify_pairs(arrays, candidates(arrays), threshold=0.8)
+
+
 def _exact_and_lsh_pair_pipelines(spark, sf_dir):
     """ONE cached shingle projection feeding BOTH the exact Jaccard pair
     pipeline and the banded-LSH tier — shared by the pair-level
@@ -285,11 +298,10 @@ def _exact_and_lsh_pair_pipelines(spark, sf_dir):
     (`near_dup_cluster_agreement`) audits so the two evaluations are
     guaranteed to compare the SAME LSH configuration (n=3, threshold
     0.8, default banding) against the same exact baseline."""
-    arrays = _shared_shingle_arrays(spark, sf_dir)
-    exact = core.jaccard_pairs_from_arrays(arrays, threshold=0.8)
-    lsh = minhash._verify_pairs(
-        arrays, minhash.native_minhash_candidates(arrays), threshold=0.8
+    exact = core.jaccard_pairs_from_arrays(
+        _shared_shingle_arrays(spark, sf_dir), threshold=0.8
     )
+    lsh = _verified_pairs(spark, sf_dir, minhash.native_minhash_candidates)
     return exact, lsh
 
 
@@ -358,9 +370,9 @@ def lsh_recall_floor_violations(recall_df: DataFrame) -> list:
     rows by construction), so the collect is O(1).
 
     An EMPTY band table is itself a violation (ADVICE r5, mirroring
-    `knn_recall_floor_violations`): zero exact pairs means the corpus or
-    threshold is misconfigured and the evaluation is vacuous — the gate
-    must not pass on no evidence."""
+    `sim.queries.recall_floor_violations`): zero exact pairs means the
+    corpus or threshold is misconfigured and the evaluation is vacuous —
+    the gate must not pass on no evidence."""
     rows = recall_df.orderBy("band20").collect()
     if not rows:
         return ["recall frame is empty — evaluation is vacuous"]
@@ -612,7 +624,7 @@ def minhash_near_dup_pairs_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     _require_driver_heap_for_mllib_twin(
         spark, docs, "minhash_near_dup_pairs_mllib"
     )
-    return minhash.minhash_near_dup_pairs(docs, n=3, threshold=0.8)
+    return _verified_pairs(spark, sf_dir, minhash.mllib_candidates)
 
 
 from newsflow.dedup import simhash_md5  # noqa: E402
@@ -817,7 +829,7 @@ def near_dup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     _require_driver_heap_for_mllib_twin(
         spark, docs, "near_dup_clusters_lsh"
     )
-    pairs = minhash.native_minhash_near_dup_pairs(docs, n=3, threshold=0.8)
+    pairs = _verified_pairs(spark, sf_dir, minhash.native_minhash_candidates)
     return _clusters(pairs)
 
 

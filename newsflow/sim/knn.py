@@ -97,6 +97,36 @@ def cosine_topk(
     )
 
 
+def recall_at_k(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per-query recall of an approximate top-k against the exact one.
+
+    Both inputs carry (query_id, neighbor_id), one row per retrieved
+    neighbor. Returns (query_id, n_hits, k, recall_at_k): ``k`` counts the
+    exact side's rows per query, ``n_hits`` those the approximate side
+    also returned. The join touches only the two result sets."""
+    hits = approx.select(
+        F.col("query_id").alias("aq"),
+        F.col("neighbor_id").alias("an"),
+        F.lit(1).alias("hit"),
+    )
+    n = F.count(F.lit(1))
+    return (
+        exact.select("query_id", "neighbor_id")
+        .join(
+            hits,
+            (F.col("query_id") == F.col("aq"))
+            & (F.col("neighbor_id") == F.col("an")),
+            "left",
+        )
+        .groupBy("query_id")
+        .agg(
+            F.count("hit").alias("n_hits"),
+            n.alias("k"),
+            dround(F.count("hit").cast("double") / n, 4).alias("recall_at_k"),
+        )
+    )
+
+
 def label_centroids(embeddings: DataFrame) -> DataFrame:
     """Per-label per-dimension mean — the vector aggregate underlying IVF
     coarse quantization (posexplode + grouped mean, all JVM-side)."""

@@ -54,7 +54,7 @@ from pyspark.sql.window import Window
 
 from newsflow.functions.scalars import dround
 from newsflow.registry import register
-from newsflow.sim.knn import dot_expr
+from newsflow.sim.knn import dot_expr, recall_at_k
 from newsflow.sim.pq import _unit
 from newsflow.tables import load_table, local_df, spread
 
@@ -1486,24 +1486,10 @@ def _recall_frame(
     exactk = (
         exact.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select("query_id", "node")
+        .select("query_id", F.col("node").alias("neighbor_id"))
     )
-    hits = exactk.join(
-        beam.select("query_id", "node", F.lit(1).alias("hit")),
-        ["query_id", "node"],
-        "left",
-    )
-    return hits.groupBy("query_id").agg(
-        F.count("hit").alias("n_hits"),
-        F.count(F.lit(1)).alias("k"),
-        (
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1))
-                + F.lit(1e-9),
-                4,
-            )
-            + F.lit(0.0)
-        ).alias("recall_at_k"),
+    return recall_at_k(
+        exactk, beam.select("query_id", F.col("node").alias("neighbor_id"))
     )
 
 

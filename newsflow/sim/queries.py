@@ -276,6 +276,24 @@ def _exact_filtered_topk_sql(in_list: str) -> str:
     """
 
 
+def _recall_select_sql(
+    exact_rel: str, approx_rel: str, lead: str = ""
+) -> str:
+    """DuckDB twin of `knn.recall_at_k`: the exact top-k relation
+    left-joined to the approximate one, grouped to (``lead`` columns,
+    query_id, n_hits, k, recall_at_k)."""
+    return f"""
+    SELECT {lead}e.query_id,
+           CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
+           CAST(count(*) AS BIGINT) AS k,
+           (round(count(a.neighbor_id)::DOUBLE / count(*) + 1e-9, 4) + 0.0)
+             AS recall_at_k
+    FROM {exact_rel} e
+    LEFT JOIN {approx_rel} a
+      ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
+    GROUP BY e.query_id"""
+
+
 def filtered_recall_oracle_sql() -> str:
     """FULLY COMPOSED oracle (the knn_ivf_recall_eval form, per
     selectivity tier): filtered brute-force baseline and the pushed-
@@ -294,16 +312,11 @@ def filtered_recall_oracle_sql() -> str:
             candidate_where=f"AND dd.source IN ({in_list})",
         )
         parts.append(f"ap_{label} AS ({ap_sql})")
-        selects.append(f"""
-    SELECT '{label}' AS selectivity, e.query_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(count(*) AS BIGINT) AS k,
-           (round(count(a.neighbor_id)::DOUBLE / count(*) + 1e-9, 4) + 0.0)
-             AS recall_at_k
-    FROM ex_{label} e
-    LEFT JOIN ap_{label} a
-      ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id""")
+        selects.append(
+            _recall_select_sql(
+                f"ex_{label}", f"ap_{label}", f"'{label}' AS selectivity, "
+            )
+        )
     return (
         "WITH "
         + ",\n    ".join(parts)
@@ -355,44 +368,13 @@ def knn_filtered_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb["vec_id"] == allowed["doc_id"],
             "left_semi",
         )
-        exact = knn.cosine_topk(corpus, queries, k=5).select(
-            "query_id", "neighbor_id"
-        )
         approx = native_ivf_search(
             index, queries, k=5, n_probe=2, neighbor_filter=allowed
-        ).select(
-            F.col("query_id").alias("aq"),
-            F.col("neighbor_id").alias("an"),
-            F.lit(1).alias("hit"),
         )
         outs.append(
-            exact.join(
-                approx,
-                (F.col("query_id") == F.col("aq"))
-                & (F.col("neighbor_id") == F.col("an")),
-                "left",
-            )
-            .groupBy("query_id")
-            .agg(
-                F.count("hit").alias("n_hits"),
-                F.count(F.lit(1)).alias("k"),
-                (
-                    F.round(
-                        F.count("hit").cast("double")
-                        / F.count(F.lit(1))
-                        + F.lit(1e-9),
-                        4,
-                    )
-                    + F.lit(0.0)
-                ).alias("recall_at_k"),
-            )
-            .select(
-                F.lit(label).alias("selectivity"),
-                "query_id",
-                "n_hits",
-                "k",
-                "recall_at_k",
-            )
+            knn.recall_at_k(
+                knn.cosine_topk(corpus, queries, k=5), approx
+            ).select(F.lit(label).alias("selectivity"), "*")
         )
     out = outs[0]
     for o in outs[1:]:
@@ -478,21 +460,21 @@ _EXACT_TOPK_SQL = f"""
 """
 
 
+def _recall_oracle_sql(approx_sql: str) -> str:
+    """Composed oracle of a `knn.recall_at_k` evaluation: the exact
+    top-5 baseline (`_EXACT_TOPK_SQL`) against ``approx_sql``, an
+    approximate tier's own oracle over the same 8 queries."""
+    return f"""
+    WITH exact AS ({_EXACT_TOPK_SQL}),
+    approx AS ({approx_sql}){_recall_select_sql("exact", "approx")}
+    """
+
+
 @register(
     "knn_lsh_recall_eval",
-    oracle=f"""
-    WITH exact AS ({_EXACT_TOPK_SQL}),
-    approx AS ({hyperplane_topk_oracle_sql(k=5, dim=64, max_query_id=8)})
-    SELECT e.query_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(count(*) AS BIGINT) AS k,
-           (round(count(a.neighbor_id)::DOUBLE / count(*) + 1e-9, 4) + 0.0)
-             AS recall_at_k
-    FROM exact e
-    LEFT JOIN approx a
-      ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """,
+    oracle=_recall_oracle_sql(
+        hyperplane_topk_oracle_sql(k=5, dim=64, max_query_id=8)
+    ),
     tags=("similarity", "lsh", "evaluation"),
 )
 def knn_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -507,34 +489,9 @@ def knn_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recall join touches only 8×5 result rows."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
-    exact = knn.cosine_topk(emb, queries, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    approx = hyperplane_topk(emb, queries, k=5).select(
-        F.col("query_id").alias("aq"),
-        F.col("neighbor_id").alias("an"),
-        F.lit(1).alias("hit"),
-    )
-    return (
-        exact.join(
-            approx,
-            (F.col("query_id") == F.col("aq"))
-            & (F.col("neighbor_id") == F.col("an")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").alias("n_hits"),
-            F.count(F.lit(1)).alias("k"),
-            (
-                F.round(
-                    F.count("hit").cast("double") / F.count(F.lit(1))
-                    + F.lit(1e-9),
-                    4,
-                )
-                + F.lit(0.0)
-            ).alias("recall_at_k"),
-        )
+    return knn.recall_at_k(
+        knn.cosine_topk(emb, queries, k=5),
+        hyperplane_topk(emb, queries, k=5),
     )
 
 
@@ -547,24 +504,25 @@ KNN_MEAN_RECALL_FLOOR = 0.9
 KNN_QUERY_RECALL_FLOOR = 0.75
 
 
-def knn_recall_floor_violations(recall_df: DataFrame) -> list[str]:
-    """Floor violations over a `knn_lsh_recall_eval`-shaped frame. The
-    frame is one row per probe query (8 at the check SF), so the
-    collect is bounded."""
+def recall_floor_violations(
+    recall_df: DataFrame, mean_floor: float, query_floor: float
+) -> list[str]:
+    """Floor violations over a `knn.recall_at_k`-shaped frame: the mean
+    recall below ``mean_floor`` and each query below ``query_floor``. The
+    frame is one row per probe query (8 at the check SF), so the collect
+    is bounded; an empty frame is itself a violation."""
     rows = recall_df.collect()
     out: list[str] = []
     if not rows:
         return ["recall frame is empty — evaluation is vacuous"]
     mean = sum(r.recall_at_k for r in rows) / len(rows)
-    if mean < KNN_MEAN_RECALL_FLOOR:
-        out.append(
-            f"mean recall@k {mean:.4f} < floor {KNN_MEAN_RECALL_FLOOR}"
-        )
+    if mean < mean_floor:
+        out.append(f"mean recall@k {mean:.4f} < floor {mean_floor}")
     for r in rows:
-        if r.recall_at_k < KNN_QUERY_RECALL_FLOOR:
+        if r.recall_at_k < query_floor:
             out.append(
                 f"query {r.query_id}: recall@k {r.recall_at_k} < "
-                f"floor {KNN_QUERY_RECALL_FLOOR}"
+                f"floor {query_floor}"
             )
     return out
 
@@ -576,19 +534,9 @@ def knn_recall_floor_violations(recall_df: DataFrame) -> list[str]:
     # and SQL-replayable, so DuckDB recomputes the recall measurement
     # end-to-end (no assert-the-claim TRUE literals anywhere, unlike
     # knn_lsh_recall_eval whose xxhash64 index side cannot be replayed).
-    oracle=f"""
-    WITH exact AS ({_EXACT_TOPK_SQL}),
-    approx AS ({ivf_native_oracle_sql(k=5, n_probe=2, max_query_id=8)})
-    SELECT e.query_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(count(*) AS BIGINT) AS k,
-           (round(count(a.neighbor_id)::DOUBLE / count(*) + 1e-9, 4) + 0.0)
-             AS recall_at_k
-    FROM exact e
-    LEFT JOIN approx a
-      ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """,
+    oracle=_recall_oracle_sql(
+        ivf_native_oracle_sql(k=5, n_probe=2, max_query_id=8)
+    ),
     tags=("similarity", "ivf", "evaluation"),
 )
 def knn_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -606,34 +554,9 @@ def knn_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = cached_native_ivf_index(spark, sf_dir)
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
-    exact = knn.cosine_topk(emb, queries, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    approx = native_ivf_search(index, queries, k=5, n_probe=2).select(
-        F.col("query_id").alias("aq"),
-        F.col("neighbor_id").alias("an"),
-        F.lit(1).alias("hit"),
-    )
-    return (
-        exact.join(
-            approx,
-            (F.col("query_id") == F.col("aq"))
-            & (F.col("neighbor_id") == F.col("an")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").alias("n_hits"),
-            F.count(F.lit(1)).alias("k"),
-            (
-                F.round(
-                    F.count("hit").cast("double") / F.count(F.lit(1))
-                    + F.lit(1e-9),
-                    4,
-                )
-                + F.lit(0.0)
-            ).alias("recall_at_k"),
-        )
+    return knn.recall_at_k(
+        knn.cosine_topk(emb, queries, k=5),
+        native_ivf_search(index, queries, k=5, n_probe=2),
     )
 
 
@@ -661,19 +584,7 @@ def knn_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FULLY COMPOSED oracle (same form as knn_ivf_recall_eval): both
     # pipelines are deterministic and SQL-replayable, so DuckDB
     # recomputes the recall measurement end-to-end.
-    oracle=f"""
-    WITH exact AS ({_EXACT_TOPK_SQL}),
-    approx AS ({pq_oracle_sql(k=5, max_query_id=8)})
-    SELECT e.query_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(count(*) AS BIGINT) AS k,
-           (round(count(a.neighbor_id)::DOUBLE / count(*) + 1e-9, 4) + 0.0)
-             AS recall_at_k
-    FROM exact e
-    LEFT JOIN approx a
-      ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """,
+    oracle=_recall_oracle_sql(pq_oracle_sql(k=5, max_query_id=8)),
     tags=("similarity", "pq", "evaluation"),
 )
 def knn_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -682,40 +593,14 @@ def knn_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of `knn_ivf_recall_eval`. The ADC scan is a REAL approximation
     (codes only — 16 nibbles per vector — until the top-64 re-rank),
     so this measurement plus the floors in
-    `knn_recall_floor_violations` is what authorizes the tier.
+    `recall_floor_violations` is what authorizes the tier.
 
     Scale shape: the two top-k pipelines dominate; the recall join
     touches 8x5 result rows."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
-    exact = knn.cosine_topk(emb, queries, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    approx = pq_topk(emb, queries, k=5).select(
-        F.col("query_id").alias("aq"),
-        F.col("neighbor_id").alias("an"),
-        F.lit(1).alias("hit"),
-    )
-    return (
-        exact.join(
-            approx,
-            (F.col("query_id") == F.col("aq"))
-            & (F.col("neighbor_id") == F.col("an")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").alias("n_hits"),
-            F.count(F.lit(1)).alias("k"),
-            (
-                F.round(
-                    F.count("hit").cast("double") / F.count(F.lit(1))
-                    + F.lit(1e-9),
-                    4,
-                )
-                + F.lit(0.0)
-            ).alias("recall_at_k"),
-        )
+    return knn.recall_at_k(
+        knn.cosine_topk(emb, queries, k=5), pq_topk(emb, queries, k=5)
     )
 
 
@@ -726,27 +611,6 @@ from newsflow.sim.ivfpq import ivfpq_oracle_sql, ivfpq_topk  # noqa: E402
 # measured at sf0.01 with 2/8 cells probed: mean 0.9, min 0.6.
 IVFPQ_MEAN_RECALL_FLOOR = 0.85
 IVFPQ_QUERY_RECALL_FLOOR = 0.5
-
-
-def ivfpq_recall_floor_violations(recall_df: DataFrame) -> list[str]:
-    """Floor violations over a `knn_ivfpq_recall_eval`-shaped frame
-    (bounded collect; empty frame is itself a violation)."""
-    rows = recall_df.collect()
-    out: list[str] = []
-    if not rows:
-        return ["recall frame is empty — evaluation is vacuous"]
-    mean = sum(r.recall_at_k for r in rows) / len(rows)
-    if mean < IVFPQ_MEAN_RECALL_FLOOR:
-        out.append(
-            f"mean recall@k {mean:.4f} < floor {IVFPQ_MEAN_RECALL_FLOOR}"
-        )
-    for r in rows:
-        if r.recall_at_k < IVFPQ_QUERY_RECALL_FLOOR:
-            out.append(
-                f"query {r.query_id}: recall@k {r.recall_at_k} < "
-                f"floor {IVFPQ_QUERY_RECALL_FLOOR}"
-            )
-    return out
 
 
 @register(
@@ -769,57 +633,19 @@ def knn_cosine_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "knn_ivfpq_recall_eval",
     # FULLY COMPOSED oracle (same form as the IVF/PQ evals).
-    oracle=f"""
-    WITH exact AS ({_EXACT_TOPK_SQL}),
-    approx AS ({ivfpq_oracle_sql(k=5, max_query_id=8)})
-    SELECT e.query_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(count(*) AS BIGINT) AS k,
-           (round(count(a.neighbor_id)::DOUBLE / count(*) + 1e-9, 4) + 0.0)
-             AS recall_at_k
-    FROM exact e
-    LEFT JOIN approx a
-      ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """,
+    oracle=_recall_oracle_sql(ivfpq_oracle_sql(k=5, max_query_id=8)),
     tags=("similarity", "ivf", "pq", "evaluation"),
 )
 def knn_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@5 of the IVF-PQ tier against the brute-force
     baseline, recomputed end-to-end by the composed oracle. Floors
-    (`ivfpq_recall_floor_violations`) are the tier's own — looser than
+    (`IVFPQ_*_RECALL_FLOOR`) are the tier's own — looser than
     the single-approximation tiers because probe misses bound recall —
     and red-on-misconfig is proven in tests/test_recall_gates.py."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
-    exact = knn.cosine_topk(emb, queries, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    approx = ivfpq_topk(emb, queries, k=5).select(
-        F.col("query_id").alias("aq"),
-        F.col("neighbor_id").alias("an"),
-        F.lit(1).alias("hit"),
-    )
-    return (
-        exact.join(
-            approx,
-            (F.col("query_id") == F.col("aq"))
-            & (F.col("neighbor_id") == F.col("an")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").alias("n_hits"),
-            F.count(F.lit(1)).alias("k"),
-            (
-                F.round(
-                    F.count("hit").cast("double") / F.count(F.lit(1))
-                    + F.lit(1e-9),
-                    4,
-                )
-                + F.lit(0.0)
-            ).alias("recall_at_k"),
-        )
+    return knn.recall_at_k(
+        knn.cosine_topk(emb, queries, k=5), ivfpq_topk(emb, queries, k=5)
     )
 
 
@@ -1003,19 +829,9 @@ def knn_cosine_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "knn_sq8_recall_eval",
-    oracle=f"""
-    WITH exact AS ({_EXACT_TOPK_SQL}),
-    approx AS ({sq8_topk_oracle_sql(k=5, pool=SQ8_POOL, max_query_id=8)})
-    SELECT e.query_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(count(*) AS BIGINT) AS k,
-           (round(count(a.neighbor_id)::DOUBLE / count(*) + 1e-9, 4) + 0.0)
-             AS recall_at_k
-    FROM exact e
-    LEFT JOIN approx a
-      ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """,
+    oracle=_recall_oracle_sql(
+        sq8_topk_oracle_sql(k=5, pool=SQ8_POOL, max_query_id=8)
+    ),
     tags=("similarity", "sq8", "evaluation"),
 )
 def knn_sq8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1025,34 +841,8 @@ def knn_sq8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus's retrieval."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
-    exact = knn.cosine_topk(emb, queries, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    approx = sq8_topk(emb, queries, k=5).select(
-        F.col("query_id").alias("aq"),
-        F.col("neighbor_id").alias("an"),
-        F.lit(1).alias("hit"),
-    )
-    return (
-        exact.join(
-            approx,
-            (F.col("query_id") == F.col("aq"))
-            & (F.col("neighbor_id") == F.col("an")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").cast("long").alias("n_hits"),
-            F.count(F.lit(1)).cast("long").alias("k"),
-            (
-                F.round(
-                    F.count("hit").cast("double") / F.count(F.lit(1))
-                    + F.lit(1e-9),
-                    4,
-                )
-                + F.lit(0.0)
-            ).alias("recall_at_k"),
-        )
+    return knn.recall_at_k(
+        knn.cosine_topk(emb, queries, k=5), sq8_topk(emb, queries, k=5)
     )
 
 
@@ -1100,19 +890,7 @@ def knn_cosine_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FULLY COMPOSED oracle (same form as the PQ/IVF/SQ8 recall rows):
     # both pipelines deterministic and SQL-replayable, so DuckDB
     # recomputes the recall measurement end-to-end.
-    oracle=f"""
-    WITH exact AS ({_EXACT_TOPK_SQL}),
-    approx AS ({opq_oracle_sql(k=5, max_query_id=8)})
-    SELECT e.query_id,
-           CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(count(*) AS BIGINT) AS k,
-           (round(count(a.neighbor_id)::DOUBLE / count(*) + 1e-9, 4) + 0.0)
-             AS recall_at_k
-    FROM exact e
-    LEFT JOIN approx a
-      ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """,
+    oracle=_recall_oracle_sql(opq_oracle_sql(k=5, max_query_id=8)),
     tags=("similarity", "opq", "evaluation"),
 )
 def knn_opq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,34 +900,8 @@ def knn_opq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     same way the straight-split one is authorized."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
-    exact = knn.cosine_topk(emb, queries, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    approx = opq_topk(emb, queries, k=5).select(
-        F.col("query_id").alias("aq"),
-        F.col("neighbor_id").alias("an"),
-        F.lit(1).alias("hit"),
-    )
-    return (
-        exact.join(
-            approx,
-            (F.col("query_id") == F.col("aq"))
-            & (F.col("neighbor_id") == F.col("an")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").cast("long").alias("n_hits"),
-            F.count(F.lit(1)).cast("long").alias("k"),
-            (
-                F.round(
-                    F.count("hit").cast("double") / F.count(F.lit(1))
-                    + F.lit(1e-9),
-                    4,
-                )
-                + F.lit(0.0)
-            ).alias("recall_at_k"),
-        )
+    return knn.recall_at_k(
+        knn.cosine_topk(emb, queries, k=5), opq_topk(emb, queries, k=5)
     )
 
 

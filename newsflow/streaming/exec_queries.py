@@ -637,9 +637,10 @@ def streaming_takedown_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
         neardup_apply_batch(
             spark, docs, 0, index_dir=index_dir, out_dir=out_dir
         )
-        from newsflow.dedup.minhash import native_minhash_near_dup_pairs
+        from newsflow.dedup.minhash import native_minhash_candidates
+        from newsflow.dedup.queries import _verified_pairs
 
-        pairs = native_minhash_near_dup_pairs(docs, n=3, threshold=0.8)
+        pairs = _verified_pairs(spark, sf_dir, native_minhash_candidates)
         d1 = (
             pairs.filter(F.col("doc_a") % _DEL_MOD == 0)
             .select(F.col("doc_a").alias("doc_id"))
@@ -1107,13 +1108,15 @@ def minhash_near_dup_pairs_cms_streamed(
     aggregation is paid regardless; that is the production posture
     being demonstrated — a real deployment cannot know its sketch is
     fresh."""
+    from functools import partial
+
     from newsflow.dedup import minhash
+    from newsflow.dedup.queries import _verified_pairs
     from newsflow.streaming.ingest import (
         plan_cms_ingest_stream,
         plan_cms_maintenance,
         read_plan_cms,
     )
-    from newsflow.tables import spread
 
     base = tempfile.mkdtemp(prefix="nf_plan_cms_ingest_")
     try:
@@ -1135,7 +1138,12 @@ def minhash_near_dup_pairs_cms_streamed(
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return minhash.native_minhash_near_dup_pairs_cms_planned(
-        docs, n=3, threshold=0.8, sketch=sketch, sketch_covers_input=False
+    return _verified_pairs(
+        spark,
+        sf_dir,
+        partial(
+            minhash.native_minhash_candidates_cms_planned,
+            sketch=sketch,
+            sketch_covers_input=False,
+        ),
     )

@@ -13,6 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from newsflow.session import get_spark
 from newsflow.tables import TABLES
+from tests.oracle_utils import MemoizedOracle
 
 SF_SMOKE = os.environ.get("NEWSFLOW_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("NEWSFLOW_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -55,8 +56,10 @@ def duck_smoke():
 
 @pytest.fixture(scope="session")
 def duck_oracle():
+    """The sf0.01 connection. Its oracle results are memoized: the
+    testdata files are read-only, so each oracle runs once per session."""
     con = make_duck(SF_ORACLE)
-    yield con
+    yield MemoizedOracle(con)
     con.close()
 
 

@@ -54,11 +54,34 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+class MemoizedOracle:
+    """A DuckDB connection whose query results are kept per SQL text, so
+    each oracle runs once per test session however many tests read it.
+    Only for connections over read-only table files: a memoized result
+    would not see a file rewritten under it."""
+
+    def __init__(self, con: duckdb.DuckDBPyConnection):
+        self._con = con
+        self._results: dict[str, pd.DataFrame] = {}
+
+    def oracle_df(self, sql: str) -> pd.DataFrame:
+        if sql not in self._results:
+            self._results[sql] = self._con.execute(sql).df()
+        return self._results[sql]
+
+
 def assert_parity(
-    sdf: DataFrame, oracle: str, con: duckdb.DuckDBPyConnection, name: str = "?"
+    sdf: DataFrame,
+    oracle: str,
+    con: duckdb.DuckDBPyConnection | MemoizedOracle,
+    name: str = "?",
 ) -> None:
     spdf = normalize(sdf.toPandas())
-    opdf = normalize(con.execute(oracle).df())
+    opdf = normalize(
+        con.oracle_df(oracle)
+        if isinstance(con, MemoizedOracle)
+        else con.execute(oracle).df()
+    )
 
     assert list(spdf.columns) == list(opdf.columns), (
         f"[{name}] column mismatch: spark={list(spdf.columns)} "

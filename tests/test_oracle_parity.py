@@ -57,6 +57,6 @@ def test_no_oracle_is_permanently_empty(duck_oracle):
     for name in ORACLE_NAMES:
         if name in LEGITIMATELY_EMPTY:
             continue
-        if len(duck_oracle.sql(SPECS[name].oracle).df()) == 0:
+        if len(duck_oracle.oracle_df(SPECS[name].oracle)) == 0:
             empty.append(name)
     assert not empty, f"permanently-empty oracles (dead constants?): {empty}"

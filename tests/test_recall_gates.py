@@ -17,9 +17,18 @@ from newsflow.dedup.queries import (
     minhash_recall_by_band,
 )
 from newsflow.sim import hyperplane
-from newsflow.sim.queries import knn_recall_floor_violations
+from newsflow.sim.queries import (
+    IVFPQ_MEAN_RECALL_FLOOR,
+    IVFPQ_QUERY_RECALL_FLOOR,
+    KNN_MEAN_RECALL_FLOOR,
+    KNN_QUERY_RECALL_FLOOR,
+    recall_floor_violations,
+)
 from newsflow.tables import load_table, spread
 from tests.conftest import SF_ORACLE
+
+KNN_FLOORS = (KNN_MEAN_RECALL_FLOOR, KNN_QUERY_RECALL_FLOOR)
+IVFPQ_FLOORS = (IVFPQ_MEAN_RECALL_FLOOR, IVFPQ_QUERY_RECALL_FLOOR)
 
 
 def _arrays(spark):
@@ -59,7 +68,7 @@ def _knn_recall_frame(spark):
 
 
 def test_knn_default_config_meets_recall_floor(spark):
-    assert not knn_recall_floor_violations(_knn_recall_frame(spark))
+    assert not recall_floor_violations(_knn_recall_frame(spark), *KNN_FLOORS)
 
 
 def test_knn_degraded_config_trips_gate(spark, monkeypatch):
@@ -70,7 +79,9 @@ def test_knn_degraded_config_trips_gate(spark, monkeypatch):
     # rebuilds the index shape (planes cache keys on n_planes).
     monkeypatch.setattr(hyperplane, "N_TABLES", 1)
     monkeypatch.setattr(hyperplane, "N_BITS", 16)
-    violations = knn_recall_floor_violations(_knn_recall_frame(spark))
+    violations = recall_floor_violations(
+        _knn_recall_frame(spark), *KNN_FLOORS
+    )
     assert violations, (
         "1-table/16-bit sign-LSH passed the recall floors — the gate "
         "has no teeth"
@@ -125,12 +136,14 @@ def test_pq_recall_floor(spark):
     """The PQ/ADC tier at its shipped config (16 subspaces x 16
     codewords, top-64 re-rank) must hold the shared KNN floors vs the
     brute-force baseline (measured at sf0.01: mean 0.95, min 0.8)."""
-    from newsflow.sim.queries import (
-        knn_pq_recall_eval,
-        knn_recall_floor_violations,
-    )
+    from newsflow.sim.queries import knn_pq_recall_eval
 
-    assert knn_recall_floor_violations(knn_pq_recall_eval(spark, SF_ORACLE)) == []
+    assert (
+        recall_floor_violations(
+            knn_pq_recall_eval(spark, SF_ORACLE), *KNN_FLOORS
+        )
+        == []
+    )
 
 
 def test_pq_degraded_config_trips_floor(spark):
@@ -138,54 +151,27 @@ def test_pq_degraded_config_trips_floor(spark):
     top-5 taken directly, r=k) — must TURN THE GATE RED: the floor is a
     tripwire, not a formality (same red-on-misconfig proof as the LSH
     and KNN gates)."""
-    import pyspark.sql.functions as F
-
-    from newsflow.sim.knn import cosine_topk
+    from newsflow.sim.knn import cosine_topk, recall_at_k
     from newsflow.sim.pq import pq_topk
-    from newsflow.sim.queries import knn_recall_floor_violations
-    from newsflow.tables import load_table, spread
 
     emb = spread(load_table(spark, SF_ORACLE, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
-    exact = cosine_topk(emb, queries, k=5).select("query_id", "neighbor_id")
-    approx = pq_topk(emb, queries, k=5, r=5).select(
-        F.col("query_id").alias("aq"),
-        F.col("neighbor_id").alias("an"),
-        F.lit(1).alias("hit"),
+    recall = recall_at_k(
+        cosine_topk(emb, queries, k=5), pq_topk(emb, queries, k=5, r=5)
     )
-    recall = (
-        exact.join(
-            approx,
-            (F.col("query_id") == F.col("aq"))
-            & (F.col("neighbor_id") == F.col("an")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            (
-                F.round(
-                    F.count("hit").cast("double") / F.count(F.lit(1))
-                    + F.lit(1e-9),
-                    4,
-                )
-                + F.lit(0.0)
-            ).alias("recall_at_k")
-        )
-    )
-    assert knn_recall_floor_violations(recall) != []
+    assert recall_floor_violations(recall, *KNN_FLOORS) != []
 
 
 def test_ivfpq_recall_floor(spark):
     """The IVF-PQ tier at its shipped config (2/8 cells probed, 16x16
     residual codebooks, top-32 re-rank) must hold its own floors
     (mean >= 0.85, per-query >= 0.5; measured 0.9 / 0.6 at sf0.01)."""
-    from newsflow.sim.queries import (
-        ivfpq_recall_floor_violations,
-        knn_ivfpq_recall_eval,
-    )
+    from newsflow.sim.queries import knn_ivfpq_recall_eval
 
     assert (
-        ivfpq_recall_floor_violations(knn_ivfpq_recall_eval(spark, SF_ORACLE))
+        recall_floor_violations(
+            knn_ivfpq_recall_eval(spark, SF_ORACLE), *IVFPQ_FLOORS
+        )
         == []
     )
 
@@ -193,41 +179,16 @@ def test_ivfpq_recall_floor(spark):
 def test_ivfpq_degraded_config_trips_floor(spark):
     """Single-cell probing with no re-rank headroom (n_probe=1, r=k)
     must TURN THE GATE RED — the tier's floors are tripwires."""
-    import pyspark.sql.functions as F
-
     from newsflow.sim.ivfpq import ivfpq_topk
-    from newsflow.sim.knn import cosine_topk
-    from newsflow.sim.queries import ivfpq_recall_floor_violations
-    from newsflow.tables import load_table, spread
+    from newsflow.sim.knn import cosine_topk, recall_at_k
 
     emb = spread(load_table(spark, SF_ORACLE, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
-    exact = cosine_topk(emb, queries, k=5).select("query_id", "neighbor_id")
-    approx = ivfpq_topk(emb, queries, k=5, n_probe=1, r=5).select(
-        F.col("query_id").alias("aq"),
-        F.col("neighbor_id").alias("an"),
-        F.lit(1).alias("hit"),
+    recall = recall_at_k(
+        cosine_topk(emb, queries, k=5),
+        ivfpq_topk(emb, queries, k=5, n_probe=1, r=5),
     )
-    recall = (
-        exact.join(
-            approx,
-            (F.col("query_id") == F.col("aq"))
-            & (F.col("neighbor_id") == F.col("an")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            (
-                F.round(
-                    F.count("hit").cast("double") / F.count(F.lit(1))
-                    + F.lit(1e-9),
-                    4,
-                )
-                + F.lit(0.0)
-            ).alias("recall_at_k")
-        )
-    )
-    assert ivfpq_recall_floor_violations(recall) != []
+    assert recall_floor_violations(recall, *IVFPQ_FLOORS) != []
 
 
 def test_sq8_recall_floor(spark):
@@ -236,13 +197,12 @@ def test_sq8_recall_floor(spark):
     recall@5 = 1.0 for every query — per-dim int8 loses far less
     ranking signal than 4-bit PQ codes, which is why SQ8 is the
     highest-fidelity compressed tier)."""
-    from newsflow.sim.queries import (
-        knn_recall_floor_violations,
-        knn_sq8_recall_eval,
-    )
+    from newsflow.sim.queries import knn_sq8_recall_eval
 
     assert (
-        knn_recall_floor_violations(knn_sq8_recall_eval(spark, SF_ORACLE))
+        recall_floor_violations(
+            knn_sq8_recall_eval(spark, SF_ORACLE), *KNN_FLOORS
+        )
         == []
     )
 

@@ -278,8 +278,10 @@ def test_opq_allocation_invariants_and_recall_floors(spark):
     )
     from newsflow.sim.pq import _unit
     from newsflow.sim.queries import (
+        KNN_MEAN_RECALL_FLOOR,
+        KNN_QUERY_RECALL_FLOOR,
         knn_opq_recall_eval,
-        knn_recall_floor_violations,
+        recall_floor_violations,
     )
     from newsflow.tables import load_table, spread
     from tests.conftest import SF_ORACLE
@@ -304,8 +306,10 @@ def test_opq_allocation_invariants_and_recall_floors(spark):
     ]
     assert energy_spread(snake) <= energy_spread(contiguous) + 1e-9
 
-    assert knn_recall_floor_violations(
-        knn_opq_recall_eval(spark, SF_ORACLE)
+    assert recall_floor_violations(
+        knn_opq_recall_eval(spark, SF_ORACLE),
+        KNN_MEAN_RECALL_FLOOR,
+        KNN_QUERY_RECALL_FLOOR,
     ) == []
 
 
