@@ -10,7 +10,9 @@ entry's value while
   under the same sf_dir rebuilds), and
 - every DataFrame the entry owns is still registered with the cache
   manager (``spark.catalog.clearCache()`` deregisters frames without
-  telling this module; the entry is rebuilt, not served half-gone).
+  telling this module; the entry is rebuilt, not served half-gone), and
+- every entry it was built over is still its slot's entry and passes
+  these checks itself (a plan over a rebuilt artifact reads a new RDD).
 
 Otherwise the entry is rebuilt. The entry it replaces has its frames
 unpersisted BEFORE the build runs: Spark's cache manager substitutes any
@@ -28,7 +30,8 @@ a cluster, where a local checkpoint would fail the request.
 
 Only the artifact is shared. Each request still reads its own inputs and
 runs its own plan over the artifact, so results are those of a fresh
-build.
+build. A ``plan/<query>`` entry (`prepared`) shares a plan, never a
+result: each call executes a new frame over it and runs every job.
 
 When to materialize an intermediate result. A registry query returns a
 lazy DataFrame and its caller runs the action, so a query cannot release
@@ -43,6 +46,10 @@ recomputing. That leaves three legal forms:
    ``ReusedExchange``, and accept a recompute where it does not fire.
 3. Request-level state that measurably pays becomes an artifact keyed on
    the request's parameters too.
+
+A registry call's plan, too, is kept only from a build that ran no Spark
+job (`prepared`): a build that writes, streams or collects eagerly is a
+side effect, and runs again on every call.
 
 `tests/test_materialization_sites.py` counts the remaining
 ``cache``/``persist``/``localCheckpoint`` calls per file against an
@@ -83,29 +90,57 @@ The kinds held here, and their users:
   `ml.quality_clf`): the fitted quality-classifier weights —
   `quality_clf_coefficients`, `quality_clf_filter_eval` and
   `quality_clf_sampled_teacher_eval`.
+- ``plan/<query>`` (every table file `load_table` opened while the plan
+  was built, and every entry above that `get` served to it; `prepared`):
+  a never-executed frame over a registry query's analyzed plan, kept
+  only from a build that ran no Spark job — every ``QuerySpec.build``.
+  Beyond the file stamp, each entry it read must still be its slot's
+  current entry and current itself.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import threading
 from dataclasses import dataclass
 from typing import Callable, Sequence, TypeVar
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
-from newsflow.tables import _schema_cache_key, table_path
+from newsflow.tables import (
+    _apply_runtime_confs_once,
+    _schema_cache_key,
+    logging_reads,
+    note_read,
+    table_path,
+)
 
 T = TypeVar("T")
+QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
-@dataclass(frozen=True)
+@dataclass(frozen=True, eq=False)
 class _Entry:
+    # `_schema_cache_key` of each table file the value was built from.
     stamp: tuple
     value: object
-    frames: tuple[DataFrame, ...]
+    frames: tuple[DataFrame, ...] = ()
+    slot: tuple = ()
+    # The artifact entries the value was built over.
+    reads: tuple[_Entry, ...] = ()
 
-    def live(self) -> bool:
-        return all(f.storageLevel.useMemory for f in self.frames)
+    def current(self) -> bool:
+        """The files are unchanged, every frame is still cached, and each
+        entry read is still its slot's current entry and current itself."""
+        return (
+            all(_schema_cache_key(key[0]) == key for key in self.stamp)
+            and all(f.storageLevel.useMemory for f in self.frames)
+            and all(
+                _ENTRIES.get(e.slot) is e and e.current() for e in self.reads
+            )
+        )
 
 
 _ENTRIES: dict[tuple, _Entry] = {}
@@ -114,6 +149,18 @@ _ENTRIES: dict[tuple, _Entry] = {}
 # _LOCK guards the two dicts themselves.
 _SLOT_LOCKS: dict[tuple, threading.Lock] = {}
 _LOCK = threading.Lock()
+
+
+def _slot(spark: SparkSession, kind: str, sf_dir: str) -> tuple:
+    """The slot of ``kind`` over ``sf_dir`` in this application. Entries
+    of any other application are dropped first."""
+    app = spark.sparkContext.applicationId
+    with _LOCK:
+        for k in [k for k in _ENTRIES if k[0] != app]:
+            del _ENTRIES[k]
+        for k in [k for k in _SLOT_LOCKS if k[0] != app]:
+            del _SLOT_LOCKS[k]
+    return (app, kind, sf_dir)
 
 
 def get(
@@ -128,26 +175,109 @@ def get(
     ``build()`` returns ``(value, frames)``: the artifact and the
     DataFrames it persisted, which the entry then owns (and unpersists
     when it is replaced)."""
-    app = spark.sparkContext.applicationId
-    slot = (app, kind, sf_dir)
-    stamp = tuple(_schema_cache_key(table_path(sf_dir, t)) for t in tables)
+    slot = _slot(spark, kind, sf_dir)
     with _LOCK:
-        for k in [k for k in _ENTRIES if k[0] != app]:
-            del _ENTRIES[k]
-        for k in [k for k in _SLOT_LOCKS if k[0] != app]:
-            del _SLOT_LOCKS[k]
         slot_lock = _SLOT_LOCKS.setdefault(slot, threading.Lock())
     with slot_lock:
         hit = _ENTRIES.get(slot)
-        if hit is not None and hit.stamp == stamp and hit.live():
-            return hit.value
-        if hit is not None:
-            for f in hit.frames:
-                f.unpersist()
-        value, frames = build()
+        if hit is None or not hit.current():
+            if hit is not None:
+                for f in hit.frames:
+                    f.unpersist()
+            stamp = tuple(
+                _schema_cache_key(table_path(sf_dir, t)) for t in tables
+            )
+            value, frames = build()
+            hit = _Entry(stamp, value, tuple(frames), slot)
+            with _LOCK:
+                _ENTRIES[slot] = hit
+        note_read(hit)
+        return hit.value
+
+
+_GROUP = "spark.jobGroup.id"
+_OWN_GROUPS = itertools.count()
+
+
+def _jobs_run(
+    spark: SparkSession, fn: Callable[[], T]
+) -> tuple[T, int | None]:
+    """``fn()`` and the number of Spark jobs it ran: the new jobs of this
+    thread's job group, or of a group of our own (cleared afterwards)
+    when the caller set none. The job description is left alone. None
+    if the count could not be settled."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = sc.getLocalProperty(_GROUP)
+    before: set[int] = set()
+    if group is None:
+        group = f"newsflow-plan-{next(_OWN_GROUPS)}"
+        sc.setLocalProperty(_GROUP, group)
+        try:
+            value = fn()
+        finally:
+            sc.setLocalProperty(_GROUP, None)
+    else:
+        before = set(tracker.getJobIdsForGroup(group))
+        value = fn()
+    # The status tracker learns of a job from the listener bus, which
+    # may not have delivered its start event yet.
+    try:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    except Py4JJavaError:  # a listener held the bus past the timeout
+        return value, None
+    return value, len(set(tracker.getJobIdsForGroup(group)) - before)
+
+
+def prepared(name: str, build: QueryFn) -> QueryFn:
+    """``build`` with its plan kept as the ``plan/<name>`` kind.
+
+    The first build over ``sf_dir`` that runs no Spark job keeps a frame
+    over the plan it returns, and that frame is never executed. A later
+    call gets a new frame over that plan, so it still runs every job:
+    only the Python build, SQL parsing and analysis are skipped. The
+    frame the caller runs is never run again, because adaptive execution
+    would then read the shuffle stages it materialized. A build that ran
+    a job (a write, a stream, an eager collect, a cold artifact) keeps
+    nothing, and the next call builds again.
+
+    The plan is stamped with every table file `load_table` opened and
+    every artifact entry `get` served while it was built. It is served
+    while the files are unchanged and each of those entries is still its
+    slot's current entry, so a rewritten file, ``clearCache()`` or a
+    rebuilt artifact each lead to a fresh build."""
+    kind = f"plan/{name}"
+
+    @functools.wraps(build)
+    def call(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _apply_runtime_confs_once(spark)
+        slot = _slot(spark, kind, sf_dir)
+        hit = _ENTRIES.get(slot)
+        if (
+            hit is not None
+            and hit.value.sparkSession is spark
+            and hit.current()
+        ):
+            return hit.value.select("*")
+        with logging_reads() as log:
+            df, jobs = _jobs_run(spark, lambda: build(spark, sf_dir))
+        entry = None
+        if jobs == 0 and isinstance(df, DataFrame) and not df.isStreaming:
+            read = dict.fromkeys(log)
+            entry = _Entry(
+                tuple(k for k in read if type(k) is tuple),
+                df.select("*"),
+                slot=slot,
+                reads=tuple(e for e in read if type(e) is _Entry),
+            )
         with _LOCK:
-            _ENTRIES[slot] = _Entry(stamp, value, tuple(frames))
-        return value
+            if entry is not None:
+                _ENTRIES[slot] = entry
+            else:
+                _ENTRIES.pop(slot, None)
+        return df
+
+    return call
 
 
 def persisted(df: DataFrame) -> DataFrame:

@@ -16,14 +16,15 @@ import importlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
+from newsflow.artifacts import QueryFn, prepared
 
 
 @dataclass(frozen=True)
 class QuerySpec:
     name: str
+    # The registered function behind `artifacts.prepared` (its
+    # ``__wrapped__``): a call on a corpus after its first job-free
+    # build runs a fresh frame over the plan that build kept.
     build: QueryFn
     oracle: str | None = None
     doc: str = ""
@@ -75,7 +76,13 @@ def register(
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, doc or (fn.__doc__ or ""), tags)
+        _REGISTRY[name] = QuerySpec(
+            name,
+            prepared(name, fn),
+            oracle,
+            doc or (fn.__doc__ or ""),
+            tags,
+        )
         return fn
 
     return deco

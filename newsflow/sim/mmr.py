@@ -11,8 +11,11 @@ stage is the distributed work — a brute-force/LSH cosine top-POOL
 against the corpus (TakeOrderedAndProject, or the existing
 `knn_cosine_lsh_native` tier). The MMR loop then operates on the fixed
 POOL×POOL similarity matrix (400 rows here) — k tiny DataFrame jobs
-over broadcast-sized frames, never touching the corpus again. The
-candidate pool and pairwise sims are cached once.
+over broadcast-sized frames. Neither the pool nor the sims is cached:
+where Catalyst reuses no exchange, the loop re-derives the pool from the
+embeddings scan (form 2 of the rule in newsflow/artifacts.py). A
+query-scoped cache outlived its call and served a rewritten embeddings
+file's old pool, and the warm call at sf0.01 ran no slower without it.
 
 Exact-oracle engineering (same toolkit as graph.pagerank): the greedy
 iteration is UNROLLED — k CTE levels in the DuckDB twin; λ exists only
@@ -122,7 +125,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("rel").desc(), "vec_id")
         .limit(MMR_POOL)
-        .cache()
     )
     pa = pool.select(
         F.col("vec_id").alias("ia"), F.col("v").alias("va"), "rel"
@@ -135,7 +137,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ib",
             dround(_cos(F.col("va"), F.col("vb")), 6).alias("sim"),
         )
-        .cache()
     )
     lam = F.expr(MMR_LAMBDA)
     oml = F.expr(MMR_ONE_MINUS_LAMBDA)

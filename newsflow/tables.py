@@ -10,6 +10,10 @@ precision above 2^53 ns).
 
 from __future__ import annotations
 
+import contextlib
+import threading
+from collections.abc import Iterator
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,6 +31,32 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+# Read logs open on this thread (`logging_reads`): the stamp of every
+# table file load_table opens goes into each of them.
+_READ_LOGS = threading.local()
+
+
+@contextlib.contextmanager
+def logging_reads() -> Iterator[list]:
+    """A list that collects, while the block runs on this thread, every
+    item passed to `note_read`: the `_schema_cache_key` of each table
+    file load_table opens (and, from newsflow.artifacts, each artifact
+    entry it serves)."""
+    logs = _READ_LOGS.__dict__.setdefault("open", [])
+    log: list = []
+    logs.append(log)
+    try:
+        yield log
+    finally:
+        logs.pop()  # blocks on one thread nest, so this one is last
+
+
+def note_read(item: object) -> None:
+    """Add ``item`` to every read log open on this thread."""
+    for log in getattr(_READ_LOGS, "open", ()):
+        log.append(item)
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -121,6 +151,7 @@ def _schema_cache_key(path: str) -> tuple:
 
 def _read_with_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     key = _schema_cache_key(path)
+    note_read(key)
     schema = _PARQUET_SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)

@@ -1,6 +1,7 @@
 """A lost cached block recomputes from lineage instead of failing the
-query. Each query's DataFrame is built over a warm cache, every cached
-RDD block is then dropped (a lost executor's blocks), and the collected
+query. Each query is called twice, so its third DataFrame is a prepared
+plan (`newsflow.artifacts.prepared`) over a warm cache; every cached RDD
+block is then dropped (a lost executor's blocks), and the collected
 result must still match the DuckDB oracle. Extend BLOCK_LOSS_QUERIES as
 more queries stop materializing through ``localCheckpoint``."""
 
@@ -31,6 +32,7 @@ BLOCK_LOSS_QUERIES = (
 def test_query_survives_lost_cached_blocks(spark, duck_oracle, name):
     spec = all_specs()[name]
     spec.build(spark, SF_ORACLE).collect()  # fill every cache it reads
+    spec.build(spark, SF_ORACLE).collect()  # keep its plan
     df = spec.build(spark, SF_ORACLE)
     assert drop_cached_blocks(spark) > 0
     assert_parity(df, spec.oracle, duck_oracle, name=name)

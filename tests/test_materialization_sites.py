@@ -35,7 +35,6 @@ ALLOWED = {
     ("ops/scale.py", "localCheckpoint"): 1,
     ("packing.py", "localCheckpoint"): 1,
     ("sim/ivf.py", "persist"): 2,
-    ("sim/mmr.py", "cache"): 2,
     ("sim/nsw.py", "localCheckpoint"): 22,
     ("sim/opq.py", "localCheckpoint"): 2,
     ("sim/pq.py", "cache"): 1,

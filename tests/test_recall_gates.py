@@ -62,9 +62,13 @@ def test_lsh_degraded_banding_trips_gate(spark):
 
 
 def _knn_recall_frame(spark):
+    """A fresh build: a plan prepared by an earlier call would not see
+    the hyperplane settings the degraded-config test patches."""
     from newsflow.registry import all_specs
 
-    return all_specs()["knn_lsh_recall_eval"].build(spark, SF_ORACLE)
+    return all_specs()["knn_lsh_recall_eval"].build.__wrapped__(
+        spark, SF_ORACLE
+    )
 
 
 def test_knn_default_config_meets_recall_floor(spark):
